@@ -1,10 +1,16 @@
 package graft.index
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.Normalizer
 import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.ml.linalg.{Vector => MlVector}
+import org.apache.spark.ml.stat.Summarizer
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import org.apache.spark.sql.Column
 
@@ -135,25 +141,172 @@ object IvfIndex {
     else base
   }
 
-  /** The metric an index at `indexPath` was built with ("cosine" for
-    * pre-metric indexes without a meta sidecar). */
-  def metricOf(spark: SparkSession, indexPath: String): String = {
-    val metaPath = new org.apache.hadoop.fs.Path(s"$indexPath/meta")
-    val fs = metaPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(metaPath))
-      spark.read.parquet(s"$indexPath/meta").head().getString(0)
-    else "cosine"
+  /** An immutable, driver-resident copy of ONE index generation's
+    * metadata — the analog of pgvector's planner reading the ivfflat
+    * centroids inside the server: ranking the lists for a query costs a
+    * `lists × dim` scalar pass on the driver, never a Spark job.
+    *
+    * A generation is keyed by [[fingerprint]], the modification time of
+    * the `centroids/` directory (every build, append, rebalance and
+    * in-place rewrite recreates it). Holds the `meta` sidecar (metric,
+    * vector column, id column — one read), the centroids as list ids plus
+    * a float matrix, and the per-list covering radii (NaN when the
+    * sidecar predates them). Resident bytes ≈ `lists × dim × 4`.
+    *
+    * The lists dataset's schema (the `bucket` partition column included)
+    * loads separately, on first use, so a centroids-only index directory
+    * still ranks. Reading the lists through [[lists]] skips Spark's
+    * parquet schema inference (a Spark job per `spark.read.parquet`);
+    * the files themselves are still listed on every read, so appended
+    * list files stay visible. */
+  final class IvfHandle private[IvfIndex] (
+      val indexPath: String,
+      val fingerprint: Long,
+      val metric: String,
+      val vecCol: Option[String],
+      val idCol: Option[String],
+      val listIds: Array[Int],
+      val centroids: Array[Array[Float]],
+      val radii: Array[Double]) {
+
+    /** The vector column probes score: the recorded one, else `embedding`
+      * (metas written before column tracking). */
+    def vecColumn: String = vecCol.getOrElse("embedding")
+
+    /** The id column probes return as `vec_id`: the recorded one, else
+      * `vec_id` (metas written before id tracking). */
+    def idColumn: String = idCol.getOrElse("vec_id")
+
+    @volatile private var schemaMemo: StructType = _
+
+    /** The lists dataset's schema, inferred once per generation. A racing
+      * duplicate inference is benign (same value). */
+    def listsSchema(spark: SparkSession): StructType = {
+      var s = schemaMemo
+      if (s == null) {
+        s = spark.read.parquet(s"$indexPath/lists").schema
+        schemaMemo = s
+      }
+      s
+    }
+
+    /** The lists dataset, read without schema inference. */
+    def lists(spark: SparkSession): DataFrame =
+      spark.read.schema(listsSchema(spark)).parquet(s"$indexPath/lists")
+
+    /** The `n` lists nearest `q` in the index metric, best first — the
+      * driver twin of `centroids.orderBy(dist(centroid, q), list_id)
+      * .limit(n)`: [[metricScore]] is the Catalyst expressions' arithmetic
+      * and the order is Spark's double ordering (NaN last, −0.0 = 0.0),
+      * ties to the lower list id, so both pick the same lists bit for bit.
+      * Throws the expressions' dimension-mismatch error. */
+    def nearestLists(q: Array[Float], n: Int): Seq[Int] = {
+      val d = new Array[Double](centroids.length)
+      var i = 0
+      while (i < d.length) {
+        val c = centroids(i)
+        if (c.length != q.length) throw new IllegalArgumentException(
+          s"vector dimension mismatch: ${c.length} vs ${q.length}")
+        d(i) = metricScore(metric, c, q)
+        i += 1
+      }
+      Array.range(0, d.length).sortWith { (a, b) =>
+        val c = SQLOrderingUtil.compareDoubles(d(a), d(b))
+        if (c != 0) c < 0 else listIds(a) < listIds(b)
+      }.iterator.take(math.max(0, n)).map(listIds(_)).toSeq
+    }
   }
 
-  /** The vector column the index was built on (None for legacy metas). */
-  def columnOf(spark: SparkSession, indexPath: String): Option[String] = {
-    val metaPath = new org.apache.hadoop.fs.Path(s"$indexPath/meta")
-    val fs = metaPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(metaPath)) None
+  // one slot per index path, replaced when the generation changes
+  private val handles = new ConcurrentHashMap[String, IvfHandle]()
+
+  private def centroidsMtime(spark: SparkSession, indexPath: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(s"$indexPath/centroids")
+    p.getFileSystem(spark.sessionState.newHadoopConf())
+      .getFileStatus(p).getModificationTime
+  }
+
+  /** The current generation's [[IvfHandle]] for `indexPath`: one FS
+    * metadata call when the cached generation is current, else a one-time
+    * load (meta + centroids) that replaces the slot. No lock is held while
+    * loading; concurrent first loads of one generation are benign
+    * duplicates. */
+  def handle(spark: SparkSession, indexPath: String): IvfHandle = {
+    val key = indexPath.stripSuffix("/")
+    // fingerprint BEFORE the load: a rewrite racing the load leaves a
+    // handle tagged older than its data, which the next call reloads
+    val fp = centroidsMtime(spark, key)
+    val cur = handles.get(key)
+    if (cur != null && cur.fingerprint == fp) cur
     else {
-      val df = spark.read.parquet(s"$indexPath/meta")
-      if (df.columns.contains("vec_col")) Some(df.head().getAs[String]("vec_col"))
+      val h = loadHandle(spark, key, fp)
+      handles.put(key, h)
+      h
+    }
+  }
+
+  /** Drop the cached handle of `indexPath` (DROP INDEX); the next use
+    * reloads it. */
+  def releaseHandle(indexPath: String): Unit =
+    handles.remove(indexPath.stripSuffix("/"))
+
+  private def loadHandle(spark: SparkSession, indexPath: String,
+                         fp: Long): IvfHandle = {
+    val metaPath = new org.apache.hadoop.fs.Path(s"$indexPath/meta")
+    val meta =
+      if (metaPath.getFileSystem(spark.sessionState.newHadoopConf()).exists(metaPath))
+        Some(spark.read.parquet(metaPath.toString).head())
       else None
+    def recorded(name: String): Option[String] =
+      meta.filter(_.schema.fieldNames.contains(name)).map(_.getAs[String](name))
+    val cents = spark.read.parquet(s"$indexPath/centroids")
+    val radius =
+      if (cents.columns.contains("radius")) col("radius")
+      else lit(Double.NaN)
+    val rows = cents.select(col("list_id"), col("centroid"), radius).collect()
+    new IvfHandle(indexPath, fp,
+      // metric stays field 0: pre-column metas hold nothing else
+      metric = meta.map(_.getString(0)).getOrElse("cosine"),
+      vecCol = recorded("vec_col"),
+      idCol = recorded("id_col"),
+      listIds = rows.map(_.getInt(0)),
+      centroids = rows.map(_.getAs[collection.Seq[Float]](1).toArray),
+      radii = rows.map(r => if (r.isNullAt(2)) Double.NaN else r.getDouble(2)))
+  }
+
+  /** The metric an index at `indexPath` was built with ("cosine" for
+    * pre-metric indexes without a meta sidecar). */
+  def metricOf(spark: SparkSession, indexPath: String): String =
+    handle(spark, indexPath).metric
+
+  /** Opclass distance of two float vectors (ip = NEGATIVE inner product,
+    * ascending = best, like [[metricDistance]]) — the one scalar ranking
+    * authority for driver and UDF rankings. Mirrors the Catalyst
+    * expressions (VectorExpressions.scala) operation for operation: each
+    * element widened to double, one sequential accumulation, the same
+    * final expression — so a scalar ranking selects bit-identically to
+    * the same ranking run as a Spark sort. Callers check dimensions. */
+  private[graft] def metricScore(metric: String, c: Array[Float],
+                                 q: Array[Float]): Double = {
+    val n = q.length
+    metric match {
+      case "cosine" =>
+        var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+        while (i < n) {
+          val x = c(i).toDouble; val y = q(i).toDouble
+          dot += x * y; na += x * x; nb += y * y; i += 1
+        }
+        1.0 - dot / (math.sqrt(na) * math.sqrt(nb))
+      case "l2" =>
+        var acc = 0.0; var i = 0
+        while (i < n) {
+          val d = c(i).toDouble - q(i).toDouble; acc += d * d; i += 1
+        }
+        math.sqrt(acc)
+      case _ => // ip
+        var dot = 0.0; var i = 0
+        while (i < n) { dot += c(i).toDouble * q(i).toDouble; i += 1 }
+        -dot
     }
   }
 
@@ -210,6 +363,23 @@ object IvfIndex {
         val keep = math.max(1L, math.ceil(effCap.toDouble / n * 1000000.0).toLong)
         df.filter(pmod(xxhash64(col(idCol)), lit(1000000L)) < keep)
       }
+    // centers + nearest-center `list_id` of every row of `feats`
+    def cluster(feats: DataFrame, featCol: String,
+                measure: String): (Array[MlVector], DataFrame) =
+      if (lists == 1) {
+        // pgvector accepts lists = 1, Spark's KMeans needs k >= 2: the one
+        // list's centroid is the training mean (KMeans' own center update)
+        val mean = sampled(feats).select(Summarizer.mean(col(featCol)))
+          .head().getAs[MlVector](0)
+        (Array(mean), feats.withColumn("list_id", lit(0)))
+      } else {
+        val model = new KMeans()
+          .setK(lists).setSeed(Seed).setDistanceMeasure(measure)
+          .setInitMode(initModeFor(lists))
+          .setFeaturesCol(featCol).setPredictionCol("list_id")
+          .fit(sampled(feats))
+        (model.clusterCenters, model.transform(feats))
+      }
     val assigned = if (metric == "cosine") {
       // cosine is undefined for zero-norm vectors (Spark's cosine KMeans
       // asserts on them): route them to list 0 unconditionally — cosine
@@ -223,13 +393,9 @@ object IvfIndex {
         .withColumn("fv", array_to_vector(col(vecCol).cast("array<double>")))
       val normed = new Normalizer().setInputCol("fv").setOutputCol("nfv").setP(2.0)
         .transform(feats)
-      val model = new KMeans()
-        .setK(lists).setSeed(Seed).setDistanceMeasure("cosine")
-        .setInitMode(initModeFor(lists))
-        .setFeaturesCol("nfv").setPredictionCol("list_id")
-        .fit(sampled(normed))
-      writeCentroids(spark, indexPath, model.clusterCenters, normalize = true)
-      model.transform(normed)
+      val (centers, clustered) = cluster(normed, "nfv", "cosine")
+      writeCentroids(spark, indexPath, centers, normalize = true)
+      clustered
         .select((srcCols :+ "list_id").map(col): _*)
         .unionByName(zeros)
     } else {
@@ -241,23 +407,19 @@ object IvfIndex {
       // geometry and only the RANKING uses the operator
       val feats = embeddings
         .withColumn("fv", array_to_vector(col(vecCol).cast("array<double>")))
-      val model = new KMeans()
-        .setK(lists).setSeed(Seed).setDistanceMeasure("euclidean")
-        .setInitMode(initModeFor(lists))
-        .setFeaturesCol("fv").setPredictionCol("list_id")
-        .fit(sampled(feats))
-      writeCentroids(spark, indexPath, model.clusterCenters, normalize = false)
-      model.transform(feats)
+      val (centers, clustered) = cluster(feats, "fv", "euclidean")
+      writeCentroids(spark, indexPath, centers, normalize = false)
+      clustered
         .select((srcCols :+ "list_id").map(col): _*)
     }
     writeLists(assigned, s"$indexPath/lists", "overwrite")
     import spark.implicits._
-    // metric stays field 0 (metricOf reads by position for legacy metas);
-    // vec_col lets the rewrite match a sort to the column the index was
-    // BUILT on — with several indexes on one table, a None-column registry
-    // entry would otherwise match any vector column and prune with the
-    // wrong geometry
-    Seq((metric, vecCol)).toDF("metric", "vec_col")
+    // metric stays field 0 (the handle reads it by position for legacy
+    // metas); vec_col lets the rewrite match a sort to the column the
+    // index was BUILT on — with several indexes on one table, a None-column
+    // registry entry would otherwise match any vector column and prune
+    // with the wrong geometry; id_col is what probes return as vec_id
+    Seq((metric, vecCol, idCol)).toDF("metric", "vec_col", "id_col")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/meta")
     // per-list covering radii into the centroids sidecar — one extra scan at
     // build time (KMeans already did several) buys the filtered/iterative
@@ -327,23 +489,19 @@ object IvfIndex {
              idCol: String = "vec_id", vecCol: String = "embedding"): Long =
     timeIt("ivf_append") {
       val spark = newRows.sparkSession
-      // resolve the metric ONCE and read the centroid sidecar ONCE,
-      // driver-side (|lists| rows) — under streaming maintenance this runs
-      // per micro-batch, where redundant meta/sidecar jobs add up
-      val metric = metricOf(spark, indexPath)
+      // metric and centroid sidecar from the generation's handle — under
+      // streaming maintenance this runs per micro-batch, where redundant
+      // meta/sidecar jobs add up
+      val h = handle(spark, indexPath)
+      val metric = h.metric
       val dist = metricDistance(metric) _
-      val centRows = spark.read.parquet(s"$indexPath/centroids").collect().map { r =>
-        val lid = r.getInt(r.fieldIndex("list_id"))
-        val c = r.getAs[collection.Seq[Float]]("centroid").toArray
-        // a legacy sidecar has NO radii for the EXISTING members — that is
-        // UNKNOWN (NaN, which filteredKnn degrades to a −∞ bound), never
-        // 0.0: writing 0.0 here would let the termination bound "prove"
-        // pre-existing far-from-centroid members can't win and silently
-        // drop true neighbors from an API documented as exact
-        val r0 = if (r.schema.fieldNames.contains("radius"))
-          r.getDouble(r.fieldIndex("radius")) else Double.NaN
-        (lid, c, r0)
-      }
+      // a legacy sidecar has NO radii for the EXISTING members — that is
+      // UNKNOWN (NaN, which filteredKnn degrades to a −∞ bound), never
+      // 0.0: writing 0.0 here would let the termination bound "prove"
+      // pre-existing far-from-centroid members can't win and silently
+      // drop true neighbors from an API documented as exact
+      val centRows = h.listIds.indices
+        .map(i => (h.listIds(i), h.centroids(i), h.radii(i)))
       val cents = spark.createDataFrame(
         centRows.map { case (l, c, _) => (l, c) }.toIndexedSeq)
         .toDF("list_id", "centroid")
@@ -362,7 +520,7 @@ object IvfIndex {
         // appends into bucket directories, a legacy per-list index keeps
         // its per-list layout — mixing the two would strand rows outside
         // the probe paths' pruning filters
-        if (spark.read.parquet(s"$indexPath/lists").columns.contains("bucket"))
+        if (h.listsSchema(spark).fieldNames.contains("bucket"))
           writeLists(assigned, s"$indexPath/lists", "append")
         else
           assigned.write.mode("append").partitionBy("list_id")
@@ -468,36 +626,30 @@ object IvfIndex {
       val skew = listSkew(spark, indexPath).head.getAs[Double]("skew")
       if (skew <= skewThreshold) false
       else {
-        val metric = metricOf(spark, indexPath)
-        // rebuild on the column the index was BUILT on (meta), not the
-        // caller's default — a mismatch would re-cluster the wrong geometry
-        val vc = columnOf(spark, indexPath).getOrElse(vecCol)
-        val nLists = spark.read.parquet(s"$indexPath/centroids").count().toInt
+        val h = handle(spark, indexPath)
+        // rebuild on the columns the index was BUILT on (meta), not the
+        // caller's defaults — a mismatch would re-cluster the wrong geometry
         graft.util.FsOps.swapDir(
           spark.sessionState.newHadoopConf(),
           new org.apache.hadoop.fs.Path(indexPath)) { (live, staging) =>
           val rows = spark.read.parquet(s"$live/lists").drop("list_id", "bucket")
-          build(rows, staging, idCol, vc, nLists, metric)
+          build(rows, staging, h.idCol.getOrElse(idCol), h.vecCol.getOrElse(vecCol),
+            h.listIds.length, h.metric)
         }
         true
       }
     }
 
   /** Top-k probe of `nprobe` lists for one query vector, in the index's
-    * opclass metric. */
+    * opclass metric: `(vec_id, dist)`, `vec_id` holding the index's id
+    * column. The lists are ranked on the driver from the handle. */
   def probe(spark: SparkSession, indexPath: String, query: Array[Float],
             k: Int, nprobe: Int): DataFrame = {
-    val dist = metricDistance(metricOf(spark, indexPath)) _
-    // index metadata lookup: |lists| rows, driver-side by design
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
-      .select(col("list_id"),
-        dist(col("centroid"), typedLit(query)).as("cdist"))
-      .orderBy(col("cdist"), col("list_id"))
-      .limit(nprobe)
-      .collect().map(_.getInt(0))
-    pruneLists(spark.read.parquet(s"$indexPath/lists"), centroids.toIndexedSeq)
-      .select(col("vec_id"),
-        dist(col("embedding"), typedLit(query)).as("dist"))
+    val h = handle(spark, indexPath)
+    val dist = metricDistance(h.metric) _
+    pruneLists(h.lists(spark), h.nearestLists(query, nprobe))
+      .select(col(h.idColumn).as("vec_id"),
+        dist(col(h.vecColumn), typedLit(query)).as("dist"))
       .orderBy(col("dist"), col("vec_id"))
       .limit(k)
   }
@@ -595,7 +747,7 @@ object IvfIndex {
       metric: String = "cosine"): DataFrame = {
     // ONE ranking authority: both dispatch paths derive their distance
     // from `metric` (the flat path via metricDistance, the hierarchical
-    // path via CoarseIndex.score, which mirrors the same expressions) —
+    // path via metricScore, which mirrors the same expressions) —
     // a separate dist parameter let a caller hand the two paths
     // silently divergent rankings (r14 advice).
     // One metadata-count job on the sidecar frame (single-file parquet —
@@ -681,7 +833,7 @@ object IvfIndex {
       s"assignProbesHierarchical: unsupported metric '$metric' " +
         s"(expected one of ${Metrics.mkString(", ")})")
     // the flat fallback's Catalyst distance derives from the SAME metric
-    // that drives CoarseIndex.score — one ranking authority per call
+    // that drives CoarseIndex's metricScore — one ranking authority per call
     val dist = metricDistance(metric) _
     val spark = queries.sparkSession
     val pts = cents.select("list_id", "centroid").collect().map { r =>
@@ -773,9 +925,8 @@ object IvfIndex {
   /** The broadcast payload of [[assignProbesHierarchical]]: coarse
     * centers, per-group MIPS radii and per-group member centroid arrays,
     * with the full two-level ranking as one scalar method. The distance
-    * scalars mirror the Catalyst expressions (VectorExpressions.scala)
-    * operation-for-operation — same sequential double accumulation, same
-    * final expression shape — so the map-form assignment selects
+    * scalar is [[metricScore]], the Catalyst expressions' arithmetic
+    * operation for operation, so the map-form assignment selects
     * bit-identically to the crossJoin + top-k-aggregate form it replaced
     * (both rank by (dist ASC, id ASC) with NaN candidates skipped, the
     * TopKBuffer contract). */
@@ -787,32 +938,6 @@ object IvfIndex {
       metric: String,
       descend: Int,
       probes: Int) {
-
-    /** Opclass distance (ip = NEGATIVE inner product, ascending = best,
-      * like [[metricDistance]]); the ip coarse BOUND is applied by the
-      * caller, not here. */
-    private def score(c: Array[Float], q: Array[Float]): Double = {
-      val n = q.length
-      metric match {
-        case "cosine" =>
-          var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-          while (i < n) {
-            val x = c(i).toDouble; val y = q(i).toDouble
-            dot += x * y; na += x * x; nb += y * y; i += 1
-          }
-          1.0 - dot / (math.sqrt(na) * math.sqrt(nb))
-        case "l2" =>
-          var acc = 0.0; var i = 0
-          while (i < n) {
-            val d = c(i).toDouble - q(i).toDouble; acc += d * d; i += 1
-          }
-          math.sqrt(acc)
-        case _ => // ip
-          var dot = 0.0; var i = 0
-          while (i < n) { dot += c(i).toDouble * q(i).toDouble; i += 1 }
-          -dot
-      }
-    }
 
     /** Insert (d, id) into the ascending-(d, id)-sorted prefix [0, n) of
       * k-capacity arrays; returns the new live count. O(k) per offer with
@@ -846,7 +971,7 @@ object IvfIndex {
       var gn = 0
       var g = 0
       while (g < centers.length) {
-        var s = score(centers(g), q)
+        var s = metricScore(metric, centers(g), q)
         if (metric == "ip") s -= qn * radii(g)
         if (!java.lang.Double.isNaN(s)) gn = insert(gd, gi, gn, descend, s, g)
         g += 1
@@ -860,7 +985,7 @@ object IvfIndex {
         val lids = memberLids(gi(gg))
         var m = 0
         while (m < vecs.length) {
-          val s = score(vecs(m), q)
+          val s = metricScore(metric, vecs(m), q)
           if (!java.lang.Double.isNaN(s)) ln = insert(ld, li, ln, probes, s, lids(m))
           m += 1
         }
@@ -956,11 +1081,11 @@ object IvfIndex {
       spark: SparkSession, indexPath: String, queries: DataFrame,
       qidCol: String, qvecCol: String, k: Int, nprobe: Int): DataFrame = {
     import graft.functions.top_k_by_distance
-    val metric = metricOf(spark, indexPath)
-    val dist = metricDistance(metric) _
+    val h = handle(spark, indexPath)
+    val dist = metricDistance(h.metric) _
     val cents = spark.read.parquet(s"$indexPath/centroids")
     // the shared assignment stage — same definition as searchMany's
-    val probed = assignProbes(queries, cents, qidCol, qvecCol, nprobe, metric)
+    val probed = assignProbes(queries, cents, qidCol, qvecCol, nprobe, h.metric)
     // ONE driver-side action computes the centroid ranking (|queries|×nprobe
     // (qid, list_id) pairs — index metadata); the join side is then rebuilt
     // from the collected pairs + the original queries frame, so the ranking
@@ -972,10 +1097,10 @@ object IvfIndex {
     val probeSide = pairs.toIndexedSeq.toDF("qid", "list_id")
       .join(queries.select(col(qidCol).cast("long").as("qid"),
         col(qvecCol).as("qv")), "qid")
-    pruneLists(spark.read.parquet(s"$indexPath/lists"), listIds)
+    pruneLists(h.lists(spark), listIds)
       .join(broadcast(probeSide), Seq("list_id"))
-      .select(col("qid"), col("vec_id"),
-        dist(col("embedding"), col("qv")).as("dist"))
+      .select(col("qid"), col(h.idColumn).cast("long").as("vec_id"),
+        dist(col(h.vecColumn), col("qv")).as("dist"))
       .groupBy("qid")
       .agg(top_k_by_distance(col("dist"), col("vec_id"), k).as("top"))
       .select(col("qid"), posexplode(col("top")).as(Seq("pos", "s")))
@@ -1021,16 +1146,15 @@ object IvfIndex {
                  qidCol: String, qvecCol: String, k: Int, nprobe: Int,
                  predicate: Option[Column] = None): DataFrame = {
     import graft.functions.top_k_by_distance
-    val metric = metricOf(spark, indexPath)
-    val dist = metricDistance(metric) _
+    val h = handle(spark, indexPath)
+    val dist = metricDistance(h.metric) _
     val cents = spark.read.parquet(s"$indexPath/centroids")
-    val vecCol = columnOf(spark, indexPath).getOrElse("embedding")
-    val assigned = assignProbes(queries, cents, qidCol, qvecCol, nprobe, metric)
-    val lists = spark.read.parquet(s"$indexPath/lists")
+    val assigned = assignProbes(queries, cents, qidCol, qvecCol, nprobe, h.metric)
+    val lists = h.lists(spark)
     predicate.fold(lists)(lists.filter)
       .join(assigned, Seq("list_id"))
-      .select(col("qid"), col("vec_id"),
-        dist(col(vecCol), col("qv")).as("dist"))
+      .select(col("qid"), col(h.idColumn).cast("long").as("vec_id"),
+        dist(col(h.vecColumn), col("qv")).as("dist"))
       .groupBy("qid")
       .agg(top_k_by_distance(col("dist"), col("vec_id"), k).as("top"))
       .select(col("qid"), posexplode(col("top")).as(Seq("pos", "s")))
@@ -1070,7 +1194,7 @@ object IvfIndex {
                          k: Int, initProbes: Int,
                          predicate: Option[Column] = None): DataFrame = {
     import spark.implicits._
-    val nLists = spark.read.parquet(s"$indexPath/centroids").count().toInt
+    val nLists = handle(spark, indexPath).listIds.length
     var remaining = queries
       .select(col(qidCol).cast("long").as("qid"), col(qvecCol).as("qv"))
     var prevRemaining: DataFrame = null // checkpointed frame of the prior round
@@ -1147,27 +1271,21 @@ object IvfIndex {
     * doesn't need bit-exactness (only the OUTPUT dist is contract-bearing,
     * and it comes from the Catalyst expression inside the scan). */
   def filteredKnn(spark: SparkSession, indexPath: String, query: Array[Float],
-                  k: Int, predicate: Column,
-                  idCol: String = "vec_id", vecCol: String = "embedding",
-                  initProbes: Int = 4): DataFrame =
-    filteredKnnStats(spark, indexPath, query, k, predicate,
-      idCol, vecCol, initProbes)._1
+                  k: Int, predicate: Column, initProbes: Int = 4): DataFrame =
+    filteredKnnStats(spark, indexPath, query, k, predicate, initProbes)._1
 
   /** [[filteredKnn]] plus the number of lists actually probed — lets specs
     * pin BOTH behaviors: expansion past `initProbes` under a selective
     * filter, and early termination below `lists` when the bound engages. */
   def filteredKnnStats(spark: SparkSession, indexPath: String, query: Array[Float],
-                  k: Int, predicate: Column,
-                  idCol: String = "vec_id", vecCol: String = "embedding",
-                  initProbes: Int = 4): (DataFrame, Int) = {
+                  k: Int, predicate: Column, initProbes: Int = 4): (DataFrame, Int) = {
     import spark.implicits._
     // LIMIT 0 analog — without this the k-th-element stop test indexes
     // best(-1) on the first round
     if (k <= 0) return (Seq.empty[(Long, Double)].toDF("vec_id", "dist"), 0)
-    val metric = metricOf(spark, indexPath)
+    val h = handle(spark, indexPath)
+    val metric = h.metric
     val dist = metricDistance(metric) _
-    val centsDf = spark.read.parquet(s"$indexPath/centroids")
-    val hasRadius = centsDf.columns.contains("radius")
     def dot(a: Array[Float], b: Array[Float]): Double = {
       var s = 0.0; var i = 0
       while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }; s
@@ -1178,10 +1296,10 @@ object IvfIndex {
       math.sqrt(s)
     }
     // (list_id, probe-order distance, lower bound on member output-distance)
-    val ranked = centsDf.collect().map { r =>
-      val lid = r.getInt(r.fieldIndex("list_id"))
-      val c = r.getAs[collection.Seq[Float]]("centroid").toArray
-      val rad = if (hasRadius) r.getDouble(r.fieldIndex("radius")) else Double.NaN
+    val ranked = h.listIds.indices.map { i =>
+      val lid = h.listIds(i)
+      val c = h.centroids(i)
+      val rad = h.radii(i)
       val (cdist, lb0) = metric match {
         case "cosine" =>
           val cs = dot(query, c) /
@@ -1198,7 +1316,7 @@ object IvfIndex {
       val c = java.lang.Double.compare(x._2, y._2) // NaN cdist ranks last
       if (c != 0) c < 0 else x._1 < y._1
     }
-    val lists = spark.read.parquet(s"$indexPath/lists")
+    val lists = h.lists(spark)
     val best = collection.mutable.ArrayBuffer.empty[(Long, Double)]
     def lt(x: (Long, Double), y: (Long, Double)): Boolean = {
       val c = java.lang.Double.compare(x._2, y._2) // NaN dist sorts last
@@ -1211,8 +1329,8 @@ object IvfIndex {
       val newIds = ranked.slice(probed, p).map(_._1).toIndexedSeq
       best ++= pruneLists(lists, newIds)
         .filter(predicate)
-        .select(col(idCol).cast("long").as("vec_id"),
-          dist(col(vecCol), typedLit(query)).as("dist"))
+        .select(col(h.idColumn).cast("long").as("vec_id"),
+          dist(col(h.vecColumn), typedLit(query)).as("dist"))
         .orderBy(col("dist"), col("vec_id"))
         .limit(k)
         .collect().map(r => (r.getLong(0), r.getDouble(1)))

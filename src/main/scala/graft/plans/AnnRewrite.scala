@@ -9,10 +9,10 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLi
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.functions.{col, typedLit}
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 
-import graft.functions.{cosine_distance, CosineDistance}
+import graft.functions.CosineDistance
+import graft.index.IvfIndex.IvfHandle
 
 /** Transparent ANN rewrite — the engine-side analog of Postgres' planner
   * swapping `ORDER BY embedding <=> q LIMIT k` for an ivfflat index scan
@@ -26,6 +26,15 @@ import graft.functions.{cosine_distance, CosineDistance}
   * the index dataset (partition-pruned scan) instead of the full table.
   * Results become approximate — exactly pgvector's documented index
   * semantics; unregistered tables are untouched.
+  *
+  * Planning launches no Spark job for a bare kNN: like pgvector's planner
+  * reading the ivfflat centroids in-server, the rule ranks the lists on
+  * the driver from the index generation's [[graft.index.IvfIndex.IvfHandle]]
+  * (metric, columns, centroids and lists schema, loaded once per
+  * generation on the first plan that touches it) and reads the lists
+  * dataset with the cached schema. Per plan that costs one FS metadata
+  * call (the generation check), the lists file listing and a
+  * `lists × dim` scalar pass.
   *
   * Enable with `Graft.enable(spark)` (runtime, experimental methods) or by
   * configuring `spark.sql.extensions=graft.plans.GraftExtensions`.
@@ -45,25 +54,9 @@ object AnnIndexRegistry {
   // CREATE INDEX silently evict the first and DROP of either kill both.
   private val byPath = new ConcurrentHashMap[String, Map[String, Entry]]()
 
-  /** Memoized centroid rankings, keyed by (indexPath, index fingerprint,
-    * nprobe, FULL query vector). Content-equality on the vector — a 32-bit
-    * hash key would silently serve another query's lists on collision. The
-    * fingerprint is the centroids directory's modification time, so an
-    * in-place index rebuild (overwrite without re-register) invalidates
-    * stale rankings instead of serving them forever; one FS metadata call
-    * per probe replaces a full centroid-parquet read. LRU-bounded: a
-    * long-lived driver serving distinct query vectors must not grow the
-    * memo without bound. */
+  /** LRU bound of the hnsw candidate memo: a long-lived driver serving
+    * distinct query vectors must not grow it without bound. */
   private final val MemoMax = 1024
-  private val probeMemo = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[
-        (String, Long, Int, collection.immutable.ArraySeq[Float]), Seq[Int]](
-        64, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[
-            (String, Long, Int, collection.immutable.ArraySeq[Float]), Seq[Int]]) =
-        size() > MemoMax
-    })
 
   private def norm(p: String): String =
     p.stripPrefix("file:").stripSuffix("/")
@@ -73,11 +66,6 @@ object AnnIndexRegistry {
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     fs.getFileStatus(path).getModificationTime
   }
-
-  /** Centroids-dir mtime — changes whenever the sidecar is rewritten
-    * (Spark's overwrite mode recreates the directory). */
-  private def fingerprint(spark: SparkSession, indexPath: String): Long =
-    dirMtime(spark, s"$indexPath/centroids")
 
   def register(tablePath: String, indexPath: String, nprobe: Int): Unit =
     register(tablePath, indexPath, nprobe, column = None)
@@ -103,16 +91,21 @@ object AnnIndexRegistry {
       e.kind == "hnsw" && column.forall(c => e.column.forall(_ == c))))
       .map(_.indexPath)
 
-  /** Remove ALL indexes registered for the table. */
-  def unregister(tablePath: String): Unit = byPath.remove(norm(tablePath))
+  /** Remove ALL indexes registered for the table (and free their cached
+    * handles). */
+  def unregister(tablePath: String): Unit =
+    Option(byPath.remove(norm(tablePath))).foreach(
+      _.keys.foreach(graft.index.IvfIndex.releaseHandle))
 
   /** Remove only the named index — DROP INDEX of one of a table's indexes
     * must not disable the others' rewrites. */
-  def unregister(tablePath: String, indexPath: String): Unit =
+  def unregister(tablePath: String, indexPath: String): Unit = {
     byPath.computeIfPresent(norm(tablePath), (_, m) => {
       val rest = m - indexPath
       if (rest.isEmpty) null else rest
     })
+    graft.index.IvfIndex.releaseHandle(indexPath)
+  }
 
   def lookupAll(paths: Seq[String]): Seq[Entry] =
     paths.map(norm).flatMap(p =>
@@ -124,50 +117,19 @@ object AnnIndexRegistry {
     byPath.asScala.toSeq.flatMap { case (p, m) => m.values.map(p -> _) }
   }
 
-  // metric memo keyed on the same rebuild fingerprint as probedLists —
-  // reading the meta sidecar is a Spark job, far too heavy per optimization
-  private val metricMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), String]()
-
-  /** The registered index's opclass metric (memoized per rebuild). */
-  def metricOf(spark: SparkSession, entry: Entry): String = {
-    val key = (entry.indexPath, fingerprint(spark, entry.indexPath))
-    val cached = metricMemo.get(key)
-    if (cached != null) cached
-    else {
-      val m = graft.index.IvfIndex.metricOf(spark, entry.indexPath)
-      metricMemo.put(key, m)
-      m
-    }
-  }
-
-  private val columnMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Option[String]]()
-
-  /** The column the index was BUILT on: the registration's record if the
-    * caller gave one, else the index meta sidecar's (3-arg `register`
-    * callers never say — without the sidecar fallback a table with two
-    * vector columns could have a sort probe the wrong index's geometry).
-    * None only for legacy indexes without a recorded column. */
-  def columnOf(spark: SparkSession, entry: Entry): Option[String] =
-    entry.column.orElse {
-      val key = (entry.indexPath, fingerprint(spark, entry.indexPath))
-      columnMemo.computeIfAbsent(key,
-        _ => graft.index.IvfIndex.columnOf(spark, entry.indexPath))
-    }
-
   /** pgvector 0.8's `ivfflat.iterative_scan` analog for filtered kNN
     * through the transparent rewrite: when the query carries a predicate,
     * a fixed `nprobe` can starve the result below k (the filter eats most
     * of the probed lists' rows). Expand the probe prefix ×2, ×4, …, capped
-    * at all lists, until ≥ k rows SURVIVE the predicate. Runs the survivor
-    * counts at plan time over partition-pruned prefixes — the same
-    * plan-time-Spark-job budget [[probedLists]] already spends, one count
-    * per doubling (O(log lists) rounds). Results stay approximate, exactly
-    * like pgvector's iterative scans; [[graft.index.IvfIndex.filteredKnn]]
-    * is the exact-answer API variant. */
-  def iterativeProbedLists(spark: SparkSession, entry: Entry, q: Array[Float],
-                           k: Int, conds: Seq[Expression]): Seq[Int] = {
+    * at all lists, until ≥ k rows SURVIVE the predicate. The ranking comes
+    * from the index generation's handle (no job); the survivor counts are
+    * plan-time Spark jobs over partition-pruned prefixes, one count per
+    * doubling (O(log lists) rounds) — the only jobs the rewrite launches,
+    * and only for filtered kNN. Results stay approximate, exactly like
+    * pgvector's iterative scans; [[graft.index.IvfIndex.filteredKnn]] is
+    * the exact-answer API variant. */
+  def iterativeProbedLists(spark: SparkSession, entry: Entry, h: IvfHandle,
+                           q: Array[Float], k: Int, conds: Seq[Expression]): Seq[Int] = {
     // pgvector session knobs, honored verbatim:
     //   SET ivfflat.iterative_scan = off          -- disable expansion
     //   SET ivfflat.max_probes = n                -- cap it
@@ -178,13 +140,13 @@ object AnnIndexRegistry {
     // scan, so strict ordering always holds.
     val mode = spark.conf.getOption("ivfflat.iterative_scan")
       .map(_.trim.toLowerCase).getOrElse("relaxed_order")
-    if (mode == "off") return probedLists(spark, entry, q)
+    if (mode == "off") return h.nearestLists(q, entry.nprobe)
     val maxProbes = spark.conf.getOption("ivfflat.max_probes")
       .flatMap(v => scala.util.Try(v.trim.toInt).toOption.filter(_ > 0))
       .getOrElse(Int.MaxValue)
-    val ranked = probedLists(spark, entry.copy(nprobe = Int.MaxValue), q)
+    val ranked = h.nearestLists(q, Int.MaxValue)
     val cap = math.min(ranked.length, math.max(maxProbes, math.max(1, entry.nprobe)))
-    val idx = spark.read.parquet(s"${entry.indexPath}/lists")
+    val idx = h.lists(spark)
     val byName = idx.queryExecution.analyzed.output.map(a => a.name -> a).toMap
     // rebind the plan's filter (which references the BASE relation's
     // attribute ids) onto the index dataset's attributes, by name
@@ -210,28 +172,14 @@ object AnnIndexRegistry {
     }
   }
 
-  def probedLists(spark: SparkSession, entry: Entry, q: Array[Float]): Seq[Int] = {
-    val key = (entry.indexPath, fingerprint(spark, entry.indexPath), entry.nprobe,
-      collection.immutable.ArraySeq.unsafeWrapArray(q.clone()))
-    // NOT computeIfAbsent: the synchronizedMap lock must not be held while
-    // the centroid-ranking Spark job runs, or one slow probe serializes
-    // every other query's planning. A racing duplicate compute is benign
-    // (same deterministic value).
-    val cached = probeMemo.get(key)
-    if (cached != null) cached
-    else {
-      // rank centroids in the INDEX's opclass metric — the pruning
-      // geometry must follow the metric the lists were clustered under
-      val dist = graft.index.IvfIndex.metricDistance(metricOf(spark, entry)) _
-      val v = spark.read.parquet(s"${entry.indexPath}/centroids")
-        .select(col("list_id"), dist(col("centroid"), typedLit(q)).as("d"))
-        .orderBy(col("d"), col("list_id"))
-        .limit(entry.nprobe)
-        .collect().map(_.getInt(0)).toSeq
-      probeMemo.put(key, v)
-      v
-    }
-  }
+  /** The `entry.nprobe` lists nearest `q`, ranked on the driver in the
+    * INDEX's opclass metric (the pruning geometry must follow the metric
+    * the lists were clustered under) from the current generation's
+    * [[IvfHandle]] — one FS metadata call when the handle is current, no
+    * Spark job. Same lists, bit for bit, as
+    * `centroids.orderBy(dist, list_id).limit(nprobe)`. */
+  def probedLists(spark: SparkSession, entry: Entry, q: Array[Float]): Seq[Int] =
+    graft.index.IvfIndex.handle(spark, entry.indexPath).nearestLists(q, entry.nprobe)
 
   private val hnswMemo = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[
@@ -243,8 +191,7 @@ object AnnIndexRegistry {
         size() > MemoMax
     })
 
-  /** Memoized plan-time hnsw beam search — the graph counterpart of
-    * [[probedLists]], and for the same reason: the optimizer re-fires per
+  /** Memoized plan-time hnsw beam search: the optimizer re-fires per
     * QueryExecution, and an unmemoized probe would run a full graph-shard
     * Spark job on EVERY plan of the same kNN. Keyed on the graph dir's
     * mtime (append/compact swaps recreate it), k, the RESOLVED ef (the
@@ -329,10 +276,11 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * [[graft.index.NswIndex.search]], honoring the `hnsw.ef_search`
     * session knob through its `ef = -1` default — and its k candidate ids
     * re-enter the plan as an `id IN (…)` filter over the BASE relation;
-    * the untouched Sort/Limit above re-rank those rows exactly. Same
-    * plan-time-driver-work budget as `probedLists` (pgvector's planner
-    * also probes at plan time); k ids is strictly less data than the
-    * ivfflat path's pruned partitions. Cosine only (the NSW graph ranks
+    * the untouched Sort/Limit above re-rank those rows exactly. Unlike the
+    * ivfflat path's driver-side list ranking, a cold beam search IS a
+    * plan-time Spark job (memoized per graph generation, k, ef and query
+    * vector); k ids is strictly less data than the ivfflat path's pruned
+    * partitions. Cosine only (the NSW graph ranks
     * in cosine). A Filter between sort and scan routes the probe through
     * `NswIndex.searchFiltered` (adaptive-ef post-filtering — the graph
     * analog of the ivfflat iterative expansion) with the predicate
@@ -370,11 +318,9 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // broken or missing graph must not fail every kNN query inside the
       // optimizer — warn and stay exact.
       ids <- scala.util.Try {
-          if (filterConds.isEmpty) {
-            println(s"### REVIEWPROBE hnswRewrite fire: BARE path")
+          if (filterConds.isEmpty)
             AnnIndexRegistry.hnswCandidates(spark, entry, q, kLimit)
-          } else {
-            println(s"### REVIEWPROBE hnswRewrite fire: FILTERED path conds=${filterConds.size}")
+          else {
             val base = spark.read.parquet(
               fsRel.location.rootPaths.head.toString)
             val byName = base.queryExecution.analyzed.output
@@ -422,14 +368,20 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         }
         // among the table's registered indexes, the one matching this
         // sort's opclass metric AND column (pgvector's planner does the
-        // same operator-to-opclass matching across multiple indexes)
+        // same operator-to-opclass matching across multiple indexes).
         // kind filter FIRST: hnsw entries have no lists/centroids layout,
-        // and metricOf/columnOf on one would fail inside the optimizer
-        entry0 <- AnnIndexRegistry.lookupAll(
+        // and a handle load on one would fail inside the optimizer. The
+        // column is the registration's record, else the index meta's (3-arg
+        // `register` callers never say — without the meta fallback a table
+        // with two vector columns could probe the wrong index's geometry)
+        (entry0, h) <- AnnIndexRegistry.lookupAll(
             fsRel.location.rootPaths.map(_.toString).toSeq)
-          .filter(_.kind == "ivfflat")
-          .find(e => AnnIndexRegistry.columnOf(spark, e).forall(_ == vecAttr.name) &&
-            AnnIndexRegistry.metricOf(spark, e) == metric)
+          .iterator
+          .filter(e => e.kind == "ivfflat" && e.column.forall(_ == vecAttr.name))
+          .map(e => e -> graft.index.IvfIndex.handle(spark, e.indexPath))
+          .find { case (e, h) =>
+            e.column.orElse(h.vecCol).forall(_ == vecAttr.name) && h.metric == metric
+          }
         // pgvector's `SET ivfflat.probes = n` — the session conf overrides
         // the registered default at plan time. A malformed value must not
         // fail every kNN query inside the optimizer: warn and keep the
@@ -455,10 +407,10 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         lists = if (filterConds.nonEmpty &&
             filterConds.forall(_.references.subsetOf(rel.outputSet)))
             AnnIndexRegistry.iterativeProbedLists(
-              spark, entry, q, kLimit, filterConds)
-          else AnnIndexRegistry.probedLists(spark, entry, q)
-        idxPlan = graft.index.IvfIndex
-          .pruneLists(spark.read.parquet(s"${entry.indexPath}/lists"), lists)
+              spark, entry, h, q, kLimit, filterConds)
+          else h.nearestLists(q, entry.nprobe)
+        // the generation's cached schema: no inference job per plan
+        idxPlan = graft.index.IvfIndex.pruneLists(h.lists(spark), lists)
           .queryExecution.analyzed
         byName = idxPlan.output.map(a => a.name -> a).toMap
         // schema drift (index built before a base-table column was added):

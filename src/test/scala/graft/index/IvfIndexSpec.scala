@@ -273,4 +273,70 @@ class IvfIndexSpec extends SparkSpec {
     assert(scan.selectedPartitions.partitionCount === expectBuckets.size,
       s"scan must list exactly the ${expectBuckets.size} probed buckets")
   }
+
+  test("an index keyed by a non-vec_id id column: probe and searchMany return it as vec_id") {
+    import graft.functions.{cosine_distance, vector_lit}
+    // offset ids, and no vec_id column anywhere: a probe that read a fixed
+    // vec_id would fail to resolve instead of answering
+    val rows = graft.Tables.embeddings(spark, Sf0001)
+      .select((col("vec_id") + 1000L).as("id"), col("embedding"), col("label"))
+    val idx = graft.util.TempDirs.create("graft_idcol").resolve("idx").toString
+    IvfIndex.build(rows, idx, idCol = "id", lists = 4)
+    assert(!spark.read.parquet(s"$idx/lists").columns.contains("vec_id"))
+    assert(spark.read.parquet(s"$idx/meta").head().getAs[String]("id_col") === "id")
+    def exact(q: Array[Float]): Seq[(Long, Double)] = rows
+      .select(col("id"), cosine_distance(col("embedding"), vector_lit(q)).as("dist"))
+      .orderBy(col("dist"), col("id")).limit(10)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val probe = IvfIndex.probe(spark, idx, queryVec, 10, nprobe = 4)
+    assert(probe.columns.toSeq === Seq("vec_id", "dist"))
+    assert(probe.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      === exact(queryVec), "probe-all must equal brute force over the id column")
+    val queries = rows.filter(col("id") < 1006L)
+      .select(col("id").as("qid"), col("embedding").as("qv"))
+    val qvs = queries.collect()
+      .map(r => r.getLong(0) -> r.getAs[collection.Seq[Float]](1).toArray).toMap
+    val got = IvfIndex.searchMany(spark, idx, queries, "qid", "qv", 10, 4)
+      .collect().groupBy(_.getLong(0)).map { case (qid, rs) =>
+        qid -> rs.sortBy(_.getLong(1)).map(r => (r.getLong(2), r.getDouble(3))).toSeq
+      }
+    assert(got.keySet === qvs.keySet)
+    qvs.foreach { case (qid, qv) =>
+      assert(got(qid) === exact(qv), s"searchMany probe-all for qid $qid")
+    }
+  }
+
+  test("lists = 1 builds one list without KMeans; probe-all equals exact top-k") {
+    import graft.functions.{cosine_distance, l2_distance, vector_lit}
+    val e = graft.Tables.embeddings(spark, Sf0001)
+    for ((metric, dist) <- Seq[(String, (org.apache.spark.sql.Column,
+        org.apache.spark.sql.Column) => org.apache.spark.sql.Column)](
+        "cosine" -> cosine_distance, "l2" -> l2_distance)) {
+      val idx = graft.util.TempDirs.create(s"graft_one_list_$metric")
+        .resolve("idx").toString
+      assert(IvfIndex.build(e, idx, lists = 1, metric = metric) === ((500L, 1)))
+      val cents = spark.read.parquet(s"$idx/centroids").collect()
+      assert(cents.map(_.getInt(0)).toSeq === Seq(0))
+      val c = cents.head.getAs[collection.Seq[Float]]("centroid").toArray
+      // the one centroid is the training mean (unit-normalized for cosine)
+      val vs = e.select("embedding").collect()
+        .map(_.getAs[collection.Seq[Float]](0).map(_.toDouble).toArray)
+      val pts = if (metric == "cosine") vs.map { v =>
+          val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n)
+        } else vs
+      val mean = pts.transpose.map(_.sum / pts.length)
+      val want = if (metric == "cosine") {
+          val n = math.sqrt(mean.map(x => x * x).sum); mean.map(_ / n)
+        } else mean
+      assert(c.zip(want).forall { case (a, b) => math.abs(a - b) < 1e-5 },
+        s"$metric centroid must be the training mean")
+      val exact = e
+        .select(col("vec_id"), dist(col("embedding"), vector_lit(queryVec)).as("dist"))
+        .orderBy(col("dist"), col("vec_id")).limit(10)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val got = IvfIndex.probe(spark, idx, queryVec, 10, nprobe = 1)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(got === exact, s"$metric lists = 1 probe must equal exact top-k")
+    }
+  }
 }

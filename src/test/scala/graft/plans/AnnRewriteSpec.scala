@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -414,5 +415,84 @@ class AnnRewriteSpec extends SparkSpec {
     val after = AnnIndexRegistry.probedLists(spark, entry, queryVec)
     assert(after === before.map(l => (l + 1) % n.toInt),
       "rebuilt index must not be served stale memoized rankings")
+  }
+
+  test("a warm index generation plans a bare kNN with zero Spark jobs") {
+    AnnIndexRegistry.register(tablePath, indexPath, nprobe = 4)
+    // warm the handle (meta, centroids, lists schema) with one query
+    assert(topK(10).collect().head.getLong(0) === 0L)
+    // a query vector no plan has seen: nothing per-vector can be cached
+    val fresh = queryVec.map(_ * 0.5f + 0.01f)
+    val df = spark.read.parquet(tablePath)
+      .orderBy(cosine_distance(col("embedding"), vector_lit(fresh)), col("vec_id"))
+      .limit(10)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      def drained(): Int = {
+        org.apache.spark.GraftSparkShim.drainListenerBus(spark.sparkContext)
+        jobs.get()
+      }
+      val before = drained()
+      val plan = df.queryExecution.optimizedPlan
+      assert(drained() === before, "planning a rewritten kNN must launch no Spark job")
+      assert(plan.toString.contains("list_id"), s"expected the index scan:\n$plan")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(df.collect().length === 10)
+  }
+
+  test("driver list ranking equals Spark's orderBy(dist, list_id) over the sidecar") {
+    import graft.functions.{inner_product, l2_distance}
+    import graft.index.IvfIndex
+    import spark.implicits._
+    val dists = Map[String, (Column, Column) => Column](
+      "cosine" -> cosine_distance, "l2" -> l2_distance,
+      "ip" -> ((a, b) => -inner_product(a, b)))
+    def sparkRanking(idx: String, metric: String, q: Array[Float], n: Int): Seq[Int] =
+      spark.read.parquet(s"$idx/centroids")
+        .select(col("list_id"), dists(metric)(col("centroid"), vector_lit(q)).as("d"))
+        .orderBy(col("d"), col("list_id")).limit(n)
+        .collect().map(_.getInt(0)).toSeq
+    def check(idx: String, metric: String, qs: Seq[Array[Float]]): Unit =
+      for (q <- qs; n <- Seq(1, 3, Int.MaxValue)) {
+        val got = AnnIndexRegistry.probedLists(spark, AnnIndexRegistry.Entry(idx, n), q)
+        assert(got === sparkRanking(idx, metric, q, n), s"$metric n=$n")
+      }
+    val qs = graft.Tables.embeddings(spark, Sf0001).filter(col("vec_id") < 8)
+      .select("embedding").collect()
+      .map(_.getAs[collection.Seq[Float]](0).toArray).toSeq
+    val zero = new Array[Float](64)
+    // the built fixture indexes, one per opclass
+    for ((metric, idx) <- Seq("cosine" -> indexPath,
+        "l2" -> IndexQueries.l2IndexFor(spark, Sf0001),
+        "ip" -> IndexQueries.ipIndexFor(spark, Sf0001))) {
+      assert(IvfIndex.metricOf(spark, idx) === metric)
+      check(idx, metric, qs :+ zero)
+    }
+    // tied centroids, written out of list_id order: duplicates must break
+    // to the lower list id, and a zero-norm query (all NaN under cosine,
+    // all -0.0 under ip) must come back in list_id order
+    val base = qs.head
+    val other = qs(1)
+    val tied = Seq(7 -> base, 2 -> other, 5 -> base, 0 -> zero, 3 -> other,
+      1 -> base.map(_ * 2f), 6 -> base.map(x => -x), 4 -> base)
+    for (metric <- dists.keys) {
+      val idx = graft.util.TempDirs.create(s"graft_tied_$metric").resolve("idx").toString
+      tied.map { case (l, c) => (l, c) }.toDF("list_id", "centroid")
+        .coalesce(1).write.parquet(s"$idx/centroids")
+      Seq((metric, "embedding")).toDF("metric", "vec_col")
+        .coalesce(1).write.parquet(s"$idx/meta")
+      check(idx, metric, Seq(base, other, base.map(_ * 3f), zero))
+      if (metric == "cosine")
+        assert(AnnIndexRegistry.probedLists(spark, AnnIndexRegistry.Entry(idx, 8), zero)
+          === (0 until 8), "an all-NaN ranking is list_id order")
+      val e = intercept[IllegalArgumentException](
+        AnnIndexRegistry.probedLists(spark, AnnIndexRegistry.Entry(idx, 2), base.take(3)))
+      assert(e.getMessage.contains("vector dimension mismatch"))
+    }
   }
 }
