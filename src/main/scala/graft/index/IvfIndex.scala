@@ -194,6 +194,43 @@ object IvfIndex {
     def lists(spark: SparkSession): DataFrame =
       spark.read.schema(listsSchema(spark)).parquet(s"$indexPath/lists")
 
+    @volatile private var dirsMemo: Set[String] = _
+
+    // names of the partition directories under lists/, listed once per
+    // generation: every writer that adds one (append, rebalance) also
+    // rewrites centroids/, which starts a new generation
+    private def listDirs(spark: SparkSession): Set[String] = {
+      var d = dirsMemo
+      if (d == null) {
+        val root = new org.apache.hadoop.fs.Path(s"$indexPath/lists")
+        d = root.getFileSystem(spark.sessionState.newHadoopConf())
+          .listStatus(root).filter(_.isDirectory).map(_.getPath.getName).toSet
+        dirsMemo = d
+      }
+      d
+    }
+
+    /** The lists dataset pruned to `listIds` ([[pruneLists]]), reading
+      * only the probed lists' partition directories: explicit paths under
+      * the lists root (its `basePath`) with the cached schema. Reading the
+      * root instead lists every directory on each plan, and past
+      * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32)
+      * directories Spark lists them with a Spark job. Lists without a
+      * directory hold no rows and are skipped; when none of the probed
+      * lists has one, the root is read so the plan still names it. */
+    def probedLists(spark: SparkSession, listIds: Seq[Int]): DataFrame = {
+      val schema = listsSchema(spark)
+      val root = s"$indexPath/lists"
+      val bucketed = schema.fieldNames.contains("bucket")
+      val dirs = listIds.map(i =>
+          if (bucketed) s"bucket=${math.floorMod(i, MaxListDirs)}" else s"list_id=$i")
+        .distinct.filter(listDirs(spark))
+      val read = spark.read.schema(schema).option("basePath", root)
+      pruneLists(
+        if (dirs.isEmpty) read.parquet(root) else read.parquet(dirs.map(d => s"$root/$d"): _*),
+        listIds)
+    }
+
     /** The `n` lists nearest `q` in the index metric, best first — the
       * driver twin of `centroids.orderBy(dist(centroid, q), list_id)
       * .limit(n)`: [[metricScore]] is the Catalyst expressions' arithmetic
@@ -250,23 +287,26 @@ object IvfIndex {
   def releaseHandle(indexPath: String): Unit =
     handles.remove(indexPath.stripSuffix("/"))
 
+  // the sidecars' schemas, so loading a handle runs no inference job;
+  // columns an older sidecar lacks read as null
+  private val MetaSchema =
+    StructType.fromDDL("metric string, vec_col string, id_col string")
+  private val CentroidsSchema =
+    StructType.fromDDL("list_id int, centroid array<float>, radius double")
+
   private def loadHandle(spark: SparkSession, indexPath: String,
                          fp: Long): IvfHandle = {
     val metaPath = new org.apache.hadoop.fs.Path(s"$indexPath/meta")
     val meta =
       if (metaPath.getFileSystem(spark.sessionState.newHadoopConf()).exists(metaPath))
-        Some(spark.read.parquet(metaPath.toString).head())
+        Some(spark.read.schema(MetaSchema).parquet(metaPath.toString).head())
       else None
     def recorded(name: String): Option[String] =
-      meta.filter(_.schema.fieldNames.contains(name)).map(_.getAs[String](name))
-    val cents = spark.read.parquet(s"$indexPath/centroids")
-    val radius =
-      if (cents.columns.contains("radius")) col("radius")
-      else lit(Double.NaN)
-    val rows = cents.select(col("list_id"), col("centroid"), radius).collect()
+      meta.flatMap(m => Option(m.getAs[String](name)))
+    val rows = spark.read.schema(CentroidsSchema).parquet(s"$indexPath/centroids")
+      .collect()
     new IvfHandle(indexPath, fp,
-      // metric stays field 0: pre-column metas hold nothing else
-      metric = meta.map(_.getString(0)).getOrElse("cosine"),
+      metric = recorded("metric").getOrElse("cosine"),
       vecCol = recorded("vec_col"),
       idCol = recorded("id_col"),
       listIds = rows.map(_.getInt(0)),
@@ -291,24 +331,41 @@ object IvfIndex {
     val n = q.length
     metric match {
       case "cosine" =>
-        var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        while (i < n) {
-          val x = c(i).toDouble; val y = q(i).toDouble
-          dot += x * y; na += x * x; nb += y * y; i += 1
-        }
-        1.0 - dot / (math.sqrt(na) * math.sqrt(nb))
-      case "l2" =>
-        var acc = 0.0; var i = 0
-        while (i < n) {
-          val d = c(i).toDouble - q(i).toDouble; acc += d * d; i += 1
-        }
-        math.sqrt(acc)
-      case _ => // ip
-        var dot = 0.0; var i = 0
-        while (i < n) { dot += c(i).toDouble * q(i).toDouble; i += 1 }
-        -dot
+        cosineOf(dotAt(c, 0, q, 0, n), math.sqrt(dotAt(c, 0, c, 0, n)),
+          math.sqrt(dotAt(q, 0, q, 0, n)))
+      case "l2" => math.sqrt(sqDistAt(c, 0, q, 0, n))
+      case _ => -dotAt(c, 0, q, 0, n) // ip
     }
   }
+
+  // The accumulations behind metricScore and the batch-search kernel. The
+  // expressions fuse cosine's dot and two norms into one loop; each
+  // accumulator is still its own sequential double sum, so computing a
+  // norm once per vector instead of once per pair yields the same bits.
+
+  /** Σ a[aOff+i]·b[bOff+i], i < n: elements widened to double, summed in
+    * order. */
+  @inline private[graft] def dotAt(a: Array[Float], aOff: Int, b: Array[Float],
+                                   bOff: Int, n: Int): Double = {
+    var s = 0.0; var i = 0
+    while (i < n) { s += a(aOff + i).toDouble * b(bOff + i).toDouble; i += 1 }
+    s
+  }
+
+  /** Σ (a[aOff+i] − b[bOff+i])², i < n, in order. */
+  @inline private[graft] def sqDistAt(a: Array[Float], aOff: Int, b: Array[Float],
+                                      bOff: Int, n: Int): Double = {
+    var s = 0.0; var i = 0
+    while (i < n) {
+      val d = a(aOff + i).toDouble - b(bOff + i).toDouble; s += d * d; i += 1
+    }
+    s
+  }
+
+  /** Cosine distance from a dot product and the two norms (square roots
+    * already taken), in the expression's association. */
+  @inline private def cosineOf(dot: Double, normA: Double, normB: Double): Double =
+    1.0 - dot / (normA * normB)
 
   /** The index's ASCENDING-sortable distance column for its opclass
     * metric (`ip` is pgvector's `<#>`: NEGATIVE inner product, so
@@ -414,8 +471,7 @@ object IvfIndex {
     }
     writeLists(assigned, s"$indexPath/lists", "overwrite")
     import spark.implicits._
-    // metric stays field 0 (the handle reads it by position for legacy
-    // metas); vec_col lets the rewrite match a sort to the column the
+    // vec_col lets the rewrite match a sort to the column the
     // index was BUILT on — with several indexes on one table, a None-column
     // registry entry would otherwise match any vector column and prune
     // with the wrong geometry; id_col is what probes return as vec_id
@@ -642,12 +698,14 @@ object IvfIndex {
 
   /** Top-k probe of `nprobe` lists for one query vector, in the index's
     * opclass metric: `(vec_id, dist)`, `vec_id` holding the index's id
-    * column. The lists are ranked on the driver from the handle. */
+    * column. The lists are ranked on the driver from the handle, and the
+    * scan reads only their directories ([[IvfHandle.probedLists]]). */
   def probe(spark: SparkSession, indexPath: String, query: Array[Float],
             k: Int, nprobe: Int): DataFrame = {
+    requireKnn("probe", k, "nprobe", nprobe)
     val h = handle(spark, indexPath)
     val dist = metricDistance(h.metric) _
-    pruneLists(h.lists(spark), h.nearestLists(query, nprobe))
+    h.probedLists(spark, h.nearestLists(query, nprobe))
       .select(col(h.idColumn).as("vec_id"),
         dist(col(h.vecColumn), typedLit(query)).as("dist"))
       .orderBy(col("dist"), col("vec_id"))
@@ -741,24 +799,47 @@ object IvfIndex {
     * [[assignProbesHierarchical]] — the faiss-practice coarse quantizer
     * (IMI/HNSW-over-centroids family) that caps assignment work at
     * ~n·√lists: with corpus-proportional list counts the flat form is
-    * n²/occupancy, the measured 100× scale wall. */
-  private[graft] def assignProbes(queries: DataFrame, cents: DataFrame,
-      qidCol: String, qvecCol: String, probes: Int,
-      metric: String = "cosine"): DataFrame = {
+    * n²/occupancy, the measured 100× scale wall.
+    *
+    * The centroids come as list ids plus a matrix, an [[IvfHandle]]'s
+    * resident copy: no sidecar read and no count job per call. */
+  private[graft] def assignProbes(queries: DataFrame, listIds: Array[Int],
+      centroids: Array[Array[Float]], qidCol: String, qvecCol: String,
+      probes: Int, metric: String): DataFrame = {
     // ONE ranking authority: both dispatch paths derive their distance
     // from `metric` (the flat path via metricDistance, the hierarchical
     // path via metricScore, which mirrors the same expressions) —
     // a separate dist parameter let a caller hand the two paths
     // silently divergent rankings (r14 advice).
-    // One metadata-count job on the sidecar frame (single-file parquet —
-    // a footer read) decides the path.
-    val nLists = cents.count()
+    val nLists = listIds.length
     if (nLists < HierarchicalAssignLists || probes.toLong * 4 >= nLists)
-      assignProbesFlat(queries, cents, qidCol, qvecCol, probes,
-        metricDistance(metric))
+      assignProbesFlat(queries, centroidFrame(queries.sparkSession, listIds, centroids),
+        qidCol, qvecCol, probes, metricDistance(metric))
     else
-      assignProbesHierarchical(queries, cents, qidCol, qvecCol, probes, metric)
+      assignProbesHierarchical(queries, listIds, centroids, qidCol, qvecCol,
+        probes, metric)
   }
+
+  /** [[assignProbes]] over a centroid frame `(list_id, centroid, …)`,
+    * collected once (|lists| rows of index metadata). */
+  private[graft] def assignProbes(queries: DataFrame, cents: DataFrame,
+      qidCol: String, qvecCol: String, probes: Int,
+      metric: String = "cosine"): DataFrame = {
+    val (ids, vecs) = collectCentroids(cents)
+    assignProbes(queries, ids, vecs, qidCol, qvecCol, probes, metric)
+  }
+
+  private def collectCentroids(cents: DataFrame): (Array[Int], Array[Array[Float]]) = {
+    val rows = cents.select("list_id", "centroid").collect()
+    (rows.map(_.getInt(0)), rows.map(_.getAs[collection.Seq[Float]](1).toArray))
+  }
+
+  /** The centroids as a local relation: the flat assignment broadcasts it
+    * without reading the sidecar. */
+  private def centroidFrame(spark: SparkSession, listIds: Array[Int],
+                            centroids: Array[Array[Float]]): DataFrame =
+    spark.createDataFrame(listIds.toIndexedSeq.zip(centroids))
+      .toDF("list_id", "centroid")
 
   /** Flat assignment: rank ALL centroids per query against the broadcast
     * sidecar — exact, n·lists work. The small-index and probe-all path. */
@@ -783,9 +864,10 @@ object IvfIndex {
     * form escalates to at scale (the standard faiss recipe: assign via a
     * small centroid-over-centroids index instead of ranking every list).
     *
-    * Level 0 (driver, once per call): collect the centroid sidecar
-    * (|lists| rows — index METADATA, the writeRadii/filteredKnn budget)
-    * and Lloyd-cluster it into ~√([[CoarseProbes]]·lists) coarse groups
+    * Level 0 (driver, once per call): take the centroids (the handle's
+    * resident matrix, or a frame collected once — |lists| rows of index
+    * METADATA, the writeRadii/filteredKnn budget) and Lloyd-cluster them
+    * into ~√([[CoarseProbes]]·lists) coarse groups
     * (capped at [[CoarseGroupsMax]]) — deterministic: evenly-spaced init,
     * fixed iterations, no RNG, so the same sidecar always yields the same
     * grouping. Euclidean grouping geometry matches [[build]]'s layout for
@@ -829,6 +911,13 @@ object IvfIndex {
   private[graft] def assignProbesHierarchical(queries: DataFrame,
       cents: DataFrame, qidCol: String, qvecCol: String, probes: Int,
       metric: String = "cosine"): DataFrame = {
+    val (ids, vecs) = collectCentroids(cents)
+    assignProbesHierarchical(queries, ids, vecs, qidCol, qvecCol, probes, metric)
+  }
+
+  private def assignProbesHierarchical(queries: DataFrame, listIds: Array[Int],
+      centroids: Array[Array[Float]], qidCol: String, qvecCol: String,
+      probes: Int, metric: String): DataFrame = {
     require(metric == "cosine" || metric == "l2" || metric == "ip",
       s"assignProbesHierarchical: unsupported metric '$metric' " +
         s"(expected one of ${Metrics.mkString(", ")})")
@@ -836,9 +925,9 @@ object IvfIndex {
     // that drives CoarseIndex's metricScore — one ranking authority per call
     val dist = metricDistance(metric) _
     val spark = queries.sparkSession
-    val pts = cents.select("list_id", "centroid").collect().map { r =>
-      (r.getInt(0), r.getAs[collection.Seq[Float]](1).toArray)
-    }
+    def flat() = assignProbesFlat(queries, centroidFrame(spark, listIds, centroids),
+      qidCol, qvecCol, probes, dist)
+    val pts = listIds.zip(centroids)
     val nLists = pts.length
     val dim = pts(0)._2.length
     val groups = math.min(CoarseGroupsMax,
@@ -848,7 +937,7 @@ object IvfIndex {
     val descend = math.max(CoarseProbes,
       math.ceil(probes.toDouble * groups / nLists).toInt * CoarseDescendSlack)
     if (descend >= groups) // no pruning left at this budget — flat is exact
-      return assignProbesFlat(queries, cents, qidCol, qvecCol, probes, dist)
+      return flat()
     // JVM footprint of the broadcast CoarseIndex, per-object overhead
     // included: each member centroid is a float[] (16-byte header + 4·dim
     // data) plus an 8-byte ref and a 4-byte lid slot; each group adds a
@@ -878,7 +967,7 @@ object IvfIndex {
           "centroid relation — disk-backed blocks, but BroadcastExchange's " +
           "8 GB/driver-memory ceilings still apply) — consider a deeper " +
           "quantizer hierarchy for an index this size")
-      return assignProbesFlat(queries, cents, qidCol, qvecCol, probes, dist)
+      return flat()
     }
     val (centers, grouping) = lloydCoarse(pts.map(_._2), groups)
     // per-group covering radius over MEMBER CENTROIDS (driver-side, one
@@ -1046,20 +1135,29 @@ object IvfIndex {
     (centers, points.map(nearest(_, centers)))
   }
 
-  /** Batch probe: many queries in one distributed pass.
+  /** Fail fast on a top-k size or probe budget below 1, in the caller's
+    * parameter names — `nprobe = 0` would otherwise return no rows (an
+    * empty list filter) or die inside the top-k aggregate. */
+  private def requireKnn(what: String, k: Int, probesName: String, probes: Int): Unit = {
+    require(k >= 1, s"$what: k must be >= 1, got $k")
+    require(probes >= 1, s"$what: $probesName must be >= 1, got $probes")
+  }
+
+  /** Batch probe for serving batches: many queries in one pass.
     *
     * Scale shape, stage by stage:
-    *  1. centroid ranking per query = broadcast cents × queries, per-query
-    *     nprobe-heap ([[graft.functions.top_k_by_distance]]) — no window;
-    *  2. the distinct probed list_ids are collected (≤ |lists| ints —
-    *     index METADATA, not data) and applied as an explicit `isin`
-    *     partition filter on the lists dataset, so the scan provably reads
-    *     only the probed directories instead of relying on DPP to fire
-    *     for a broadcast join against a file source;
-    *  3. per-query top-k again as map-side k-heaps — the shuffle carries
-    *     ≤ k·|partitions| rows per query, never the full scored set.
+    *  1. probe assignment ranks the handle's centroids per query
+    *     ([[assignProbes]]) and ONE driver-side action collects the
+    *     (qid, list_id) probe pairs — |queries|·nprobe rows;
+    *  2. the pairs name the probed lists, applied as an explicit
+    *     `list_id`/`bucket` partition filter on the lists scan (which
+    *     reads only the probed directories), and count each list's probe
+    *     rows — the layout of the scoring units;
+    *  3. [[scoreProbes]]: (list, query-block) units spread the scoring by
+    *     pair volume over the session's parallelism, each emitting ≤ k
+    *     rows per query, merged per query by `top_k_by_distance`.
     *
-    * SERVING-BATCH contract: stage 2's probe-pair collect is
+    * SERVING-BATCH contract: stage 1's probe-pair collect is
     * |queries|·nprobe driver rows, so the query frame must be a serving
     * batch (≤ [[MaxServingBatch]] rows — enforced BEFORE anything is
     * collected, with guidance); a corpus-sized batch belongs on
@@ -1067,9 +1165,10 @@ object IvfIndex {
     * lists from one arbitrary representative vector. */
   def probeMany(spark: SparkSession, indexPath: String, queries: DataFrame,
                 qidCol: String, qvecCol: String, k: Int, nprobe: Int): DataFrame = {
+    requireKnn("probeMany", k, "nprobe", nprobe)
     requireServingBatch(queries, "probeMany",
       "the probe-pair collect is for serving batches — route corpus-sized " +
-        "query frames through searchMany (distributed assignment + list_id equi-join)")
+        "query frames through searchMany (distributed assignment, no driver-side pairs)")
     probeManyUnguarded(spark, indexPath, queries, qidCol, qvecCol, k, nprobe)
   }
 
@@ -1080,50 +1179,45 @@ object IvfIndex {
   private[graft] def probeManyUnguarded(
       spark: SparkSession, indexPath: String, queries: DataFrame,
       qidCol: String, qvecCol: String, k: Int, nprobe: Int): DataFrame = {
-    import graft.functions.top_k_by_distance
+    requireKnn("probeMany", k, "nprobe", nprobe)
     val h = handle(spark, indexPath)
-    val dist = metricDistance(h.metric) _
-    val cents = spark.read.parquet(s"$indexPath/centroids")
     // the shared assignment stage — same definition as searchMany's
-    val probed = assignProbes(queries, cents, qidCol, qvecCol, nprobe, h.metric)
-    // ONE driver-side action computes the centroid ranking (|queries|×nprobe
-    // (qid, list_id) pairs — index metadata); the join side is then rebuilt
-    // from the collected pairs + the original queries frame, so the ranking
-    // stage is never evaluated a second time inside the broadcast join
+    val probed = assignProbes(queries, h.listIds, h.centroids, qidCol, qvecCol,
+      nprobe, h.metric)
+    // ONE driver-side action computes the centroid ranking; the probe side
+    // is then rebuilt from the collected pairs + the original queries
+    // frame, so the ranking stage is never evaluated a second time
     import spark.implicits._
     val pairs = probed.select(col("qid"), col("list_id")).collect()
       .map(r => (r.getLong(0), r.getInt(1)))
-    val listIds = pairs.map(_._2).distinct.toIndexedSeq
-    val probeSide = pairs.toIndexedSeq.toDF("qid", "list_id")
+    val assigned = pairs.toIndexedSeq.toDF("qid", "list_id")
       .join(queries.select(col(qidCol).cast("long").as("qid"),
         col(qvecCol).as("qv")), "qid")
-    pruneLists(h.lists(spark), listIds)
-      .join(broadcast(probeSide), Seq("list_id"))
-      .select(col("qid"), col(h.idColumn).cast("long").as("vec_id"),
-        dist(col(h.vecColumn), col("qv")).as("dist"))
-      .groupBy("qid")
-      .agg(top_k_by_distance(col("dist"), col("vec_id"), k).as("top"))
-      .select(col("qid"), posexplode(col("top")).as(Seq("pos", "s")))
-      .select(col("qid"), (col("pos") + 1).cast("long").as("rank"),
-        col("s.vec_id").as("vec_id"), col("s.dist").as("dist"))
+    scoreProbes(h, assigned, pairs.groupMapReduce(_._2)(_ => 1L)(_ + _).toSeq, k, None)
   }
 
   /** Fully DISTRIBUTED batch probe — the corpus-sized twin of
     * [[probeMany]] and the generalized form of the knn_graph_ivf recipe:
-    * per-query centroid ranking stays a map-side bounded heap against the
-    * BROADCAST sidecar (never collected), probe rows flow into ONE
-    * list_id equi-join against the lists dataset, and the per-query top-k
-    * is the bounded-heap aggregate. Nothing query-frame-sized ever
-    * touches the driver — use this when the "query batch" is itself data
-    * (a kNN self-join, a bulk backfill).
+    * nothing query-frame-sized ever touches the driver — use this when
+    * the "query batch" is itself data (a kNN self-join, a bulk backfill).
     *
-    * Trade-off vs [[probeMany]]: no explicit `isin` partition filter (the
-    * probed list set is not collected), so the lists scan is pruned by
-    * the join, not the directory listing — immaterial for corpus-sized
-    * batches, which probe essentially every list anyway; for small
-    * serving batches probeMany's directory pruning wins. Results are
-    * identical (same distance expression, same heap tie-breaks) —
-    * spec-pinned against probeMany.
+    * Scale shape, stage by stage:
+    *  1. probe assignment per query against the handle's centroids
+    *     ([[assignProbes]]: a broadcast local relation, or the
+    *     hierarchical coarse quantizer past [[HierarchicalAssignLists]]
+    *     lists), map-side;
+    *  2. ONE count job collects each probed list's probe-row count —
+    *     ≤ |lists| rows of index metadata, the budget of probeMany's pair
+    *     collect. The counts prune the lists scan to the probed lists
+    *     and lay out the scoring units;
+    *  3. [[scoreProbes]]: (list, query-block) units spread the scoring by
+    *     pair volume over the session's parallelism, each emitting ≤ k
+    *     rows per query, merged per query by `top_k_by_distance`.
+    * Stages 2 and 3 evaluate the query frame once each, so it must be
+    * deterministic (the [[requireServingBatch]] assumption); a frame that
+    * probes a list the count did not see fails instead of losing rows.
+    * Results are identical to [[probeMany]]'s (same kernel, same
+    * tie-breaks) — spec-pinned.
     *
     * Contract (both forms): ONE row per qid. A duplicated qid is a
     * malformed frame — each form then answers from one arbitrary
@@ -1136,7 +1230,7 @@ object IvfIndex {
     * ORDER BY dist LIMIT k`, for corpus-sized filtered backfills
     * ("re-search every query against lang=X"). The filter lands on the
     * lists scan, so Catalyst pushes it into the parquet read and the
-    * heap never sees a non-qualifying row. With `nprobe` = the full list
+    * kernel never sees a non-qualifying row. With `nprobe` = the full list
     * count this is EXACT filtered search per query (spec-pinned ≡
     * [[filteredKnn]]); with fewer probes it is the approximate filtered
     * form — unlike [[filteredKnn]] it does NOT expand probes when the
@@ -1145,21 +1239,245 @@ object IvfIndex {
   def searchMany(spark: SparkSession, indexPath: String, queries: DataFrame,
                  qidCol: String, qvecCol: String, k: Int, nprobe: Int,
                  predicate: Option[Column] = None): DataFrame = {
-    import graft.functions.top_k_by_distance
+    requireKnn("searchMany", k, "nprobe", nprobe)
     val h = handle(spark, indexPath)
-    val dist = metricDistance(h.metric) _
-    val cents = spark.read.parquet(s"$indexPath/centroids")
-    val assigned = assignProbes(queries, cents, qidCol, qvecCol, nprobe, h.metric)
-    val lists = h.lists(spark)
-    predicate.fold(lists)(lists.filter)
-      .join(assigned, Seq("list_id"))
-      .select(col("qid"), col(h.idColumn).cast("long").as("vec_id"),
-        dist(col(h.vecColumn), col("qv")).as("dist"))
+    val assigned = assignProbes(queries, h.listIds, h.centroids, qidCol, qvecCol,
+      nprobe, h.metric)
+    val counts = assigned.groupBy("list_id").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toSeq
+    scoreProbes(h, assigned, counts, k, predicate)
+  }
+
+  /** Byte bound on a work unit's packed query block — the kernel's
+    * resident state, re-read once per list row, so it stays
+    * cache-sized: 682 queries at 384 dims. */
+  val KernelBlockBytes: Long = 1L << 20
+
+  /** A probe row as the kernel reads it: one query of a unit's block. */
+  private[index] final case class ProbeRow(qid: Long, qv: Array[Float])
+
+  /** A list row as the kernel reads it. */
+  private[index] final case class ListRow(vec_id: Long, vec: Array[Float])
+
+  /** One candidate a unit emits. */
+  private[index] final case class Hit(qid: Long, vec_id: Long, dist: Double)
+
+  /** Where a batch search's work units go. A unit is (probed list, block
+    * of that list's probe rows). A probe row of list `l` whose qid hashes
+    * to position h in [0, count) joins the first block whose end in
+    * `ends(l)` exceeds h, and the block's key in `keys(l)` is its unit;
+    * Spark's hash partitioning sends each key to the partition, of
+    * `parts`, the layout planned for it. */
+  private[index] final case class UnitLayout(parts: Int, ends: Map[Int, Array[Long]],
+                                             keys: Map[Int, Array[Int]])
+
+  /** Lay out the units of a search whose lists received `probeCounts`
+    * probe rows: the lists' probe rows, end to end in list order, are cut
+    * into `parallelism` equal chunks, one partition each; a list's rows
+    * within one chunk form its blocks there, split further so a block's
+    * packed queries stay under [[KernelBlockBytes]]. Every partition so
+    * gets the same number of probe rows, a list hotter than one chunk
+    * splits across partitions, and each list row is copied to as few
+    * blocks as that allows. */
+  private[index] def unitLayout(probeCounts: Seq[(Int, Long)], parallelism: Int,
+                                dim: Int): UnitLayout = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.types.IntegerType
+    val par = math.max(1, parallelism)
+    val total = probeCounts.map(_._2).sum
+    val chunk = math.max(1L, (total + par - 1) / par)
+    val maxBlock = math.max(1L, KernelBlockBytes / (4L * math.max(1, dim)))
+    val parts = math.max(1, ((total + chunk - 1) / chunk).toInt)
+    // (list, block end within the list, partition), in list order
+    val units = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Int)]
+    var start = 0L
+    probeCounts.sortBy(_._1).foreach { case (l, c) =>
+      var pos = 0L
+      while (pos < c) {
+        val part = ((start + pos) / chunk).toInt
+        val end = math.min(c, (part + 1) * chunk - start)
+        val n = (end - pos + maxBlock - 1) / maxBlock
+        (1L to n).foreach(b => units += ((l, pos + (end - pos) * b / n, part)))
+        pos = end
+      }
+      start += c
+    }
+    // draw keys 0, 1, 2, … and give each to a unit planned for the
+    // partition `repartition(parts, unit)` sends it to
+    val wanted = Array.fill(parts)(scala.collection.mutable.Queue.empty[Int])
+    units.indices.foreach(i => wanted(units(i)._3).enqueue(i))
+    val partOf = HashPartitioning(Seq(BoundReference(0, IntegerType, nullable = false)),
+      parts).partitionIdExpression
+    val key = new Array[Int](units.length)
+    var left = units.length
+    var x = 0
+    while (left > 0) {
+      val q = wanted(partOf.eval(InternalRow(x)).asInstanceOf[Int])
+      if (q.nonEmpty) { key(q.dequeue()) = x; left -= 1 }
+      x += 1
+    }
+    val byList = units.indices.groupBy(units(_)._1)
+    UnitLayout(parts,
+      byList.map { case (l, is) => l -> is.map(units(_)._2).toArray },
+      byList.map { case (l, is) => l -> is.map(key).toArray })
+  }
+
+  /** The IVF batch-scoring kernel behind [[searchMany]] and [[probeMany]]
+    * — pgvector's ivfflat scan (each probed list's tuples stream past the
+    * query distance), batched over many queries. `assigned` holds the
+    * probe rows (qid, qv, list_id), `probeCounts` the probe rows per
+    * list; returns (qid, rank, vec_id, dist).
+    *
+    * Work is spread by pair volume, not by the bytes of the query frame:
+    * [[unitLayout]] cuts each probed list's probe rows into query blocks,
+    * and both sides reach their (list, block) unit through one sorted
+    * cogroup on explicitly sized exchanges — AQE does not coalesce them,
+    * so a small query frame still fills the session's cores. Each list
+    * row travels to every block of its list; within a unit the list rows
+    * stream through [[scoreUnit]] while only the query block is held.
+    * Units emit ≤ k rows per query; `top_k_by_distance` merges them. The
+    * lists scan reads only the probed lists' directories, filtered by
+    * `predicate` before any row is scored. */
+  private def scoreProbes(h: IvfHandle, assigned: DataFrame,
+                          probeCounts: Seq[(Int, Long)], k: Int,
+                          predicate: Option[Column]): DataFrame = {
+    import graft.functions.top_k_by_distance
+    val spark = assigned.sparkSession
+    import spark.implicits._
+    val layout = unitLayout(probeCounts, spark.sparkContext.defaultParallelism,
+      h.centroids.headOption.fold(0)(_.length))
+    val (ends, keys) = (layout.ends, layout.keys)
+    // boxed inputs: a primitive-typed udf over nullable columns comes back
+    // nullable, and both cogroup keys must have the exploded side's type
+    val unitOf = udf { (lid: java.lang.Integer, qid: java.lang.Long) =>
+      require(qid != null, "batch search: null qid in the query frame")
+      val es = ends.getOrElse(lid, throw new IllegalStateException(
+        s"list $lid was probed but not counted: the query frame changed " +
+          "between evaluations (searchMany needs a deterministic frame)"))
+      val h = math.floorMod(
+        org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(qid, 42).toLong, es.last)
+      val i = java.util.Arrays.binarySearch(es, h) // first end > h
+      keys(lid)(if (i >= 0) i + 1 else -i - 1)
+    }.asNonNullable()
+    val unitsOf = udf((lid: Int) => keys.getOrElse(lid, Array.emptyIntArray))
+    val qs = assigned
+      .select(unitOf(col("list_id"), col("qid")).as("unit"), col("qid"), col("qv"))
+      .repartition(layout.parts, col("unit"))
+      .groupBy("unit").as[Int, ProbeRow]
+    val lists = h.probedLists(spark, keys.keys.toSeq.sorted)
+    val rows = predicate.fold(lists)(lists.filter)
+      .select(explode(unitsOf(col("list_id"))).as("unit"),
+        col(h.idColumn).cast("long").as("vec_id"), col(h.vecColumn).as("vec"))
+      .repartition(layout.parts, col("unit"))
+      .groupBy("unit").as[Int, ListRow]
+    val metric = h.metric
+    rows.cogroup(qs)((_, rs, ps) => scoreUnit(metric, k, rs, ps))
       .groupBy("qid")
       .agg(top_k_by_distance(col("dist"), col("vec_id"), k).as("top"))
       .select(col("qid"), posexplode(col("top")).as(Seq("pos", "s")))
       .select(col("qid"), (col("pos") + 1).cast("long").as("rank"),
         col("s.vec_id").as("vec_id"), col("s.dist").as("dist"))
+  }
+
+  // The sums of row `v` against the four queries packed at `off` of
+  // `block`, into acc(0..3): four independent sequential sums per pass
+  // over the row, so the adds overlap instead of waiting on one another.
+
+  private def dot4(v: Array[Float], block: Array[Float], off: Int, dim: Int,
+                   acc: Array[Double]): Unit = {
+    val o1 = off + dim; val o2 = o1 + dim; val o3 = o2 + dim
+    var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+    var i = 0
+    while (i < dim) {
+      val x = v(i).toDouble
+      s0 += x * block(off + i).toDouble; s1 += x * block(o1 + i).toDouble
+      s2 += x * block(o2 + i).toDouble; s3 += x * block(o3 + i).toDouble
+      i += 1
+    }
+    acc(0) = s0; acc(1) = s1; acc(2) = s2; acc(3) = s3
+  }
+
+  private def sqDist4(v: Array[Float], block: Array[Float], off: Int, dim: Int,
+                      acc: Array[Double]): Unit = {
+    val o1 = off + dim; val o2 = o1 + dim; val o3 = o2 + dim
+    var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+    var i = 0
+    while (i < dim) {
+      val x = v(i).toDouble
+      val d0 = x - block(off + i).toDouble; val d1 = x - block(o1 + i).toDouble
+      val d2 = x - block(o2 + i).toDouble; val d3 = x - block(o3 + i).toDouble
+      s0 += d0 * d0; s1 += d1 * d1; s2 += d2 * d2; s3 += d3 * d3
+      i += 1
+    }
+    acc(0) = s0; acc(1) = s1; acc(2) = s2; acc(3) = s3
+  }
+
+  private def dimMismatch(n: Int, m: Int) =
+    new IllegalArgumentException(s"vector dimension mismatch: $n vs $m")
+
+  /** One work unit: every list row in `rows` scored against the unit's
+    * query block, ≤ k hits per query. Queries pack into one `float[]`
+    * with their norms taken once; each row's vector is decoded once (the
+    * encoder's `toFloatArray`, unboxed) with its norm taken once. Every
+    * pair's score is [[metricScore]]'s arithmetic, so a distance equals
+    * the Catalyst expression's bit for bit — cosine included, whose
+    * norms are separate sequential sums. Scores feed one
+    * [[graft.functions.TopKBuffer]] per query: NaN skipped (zero-norm
+    * cosine rows), ties to the lower `vec_id`, ids distinct. A null row
+    * vector is skipped, as the null-intolerant expressions skip it; a row
+    * whose width differs from the block's throws the expressions'
+    * dimension-mismatch error. */
+  private[index] def scoreUnit(metric: String, k: Int, rows: Iterator[ListRow],
+                               queries: Iterator[ProbeRow]): Iterator[Hit] = {
+    if (!rows.hasNext) return Iterator.empty
+    val qs = queries.filter(_.qv != null).toArray
+    if (qs.isEmpty) return Iterator.empty
+    val nq = qs.length
+    val dim = qs(0).qv.length
+    val cosine = metric == "cosine"
+    val l2 = metric == "l2"
+    val block = new Array[Float](nq * dim)
+    val qNorm = new Array[Double](nq)
+    var j = 0
+    while (j < nq) {
+      val q = qs(j).qv
+      if (q.length != dim) throw dimMismatch(dim, q.length)
+      System.arraycopy(q, 0, block, j * dim, dim)
+      if (cosine) qNorm(j) = math.sqrt(dotAt(q, 0, q, 0, dim))
+      j += 1
+    }
+    val heaps = Array.fill(nq)(new graft.functions.TopKBuffer(k))
+    val acc = new Array[Double](4)
+    rows.foreach { r =>
+      val v = r.vec
+      if (v != null) {
+        if (v.length != dim) throw dimMismatch(v.length, dim)
+        val id = r.vec_id
+        val vNorm = if (cosine) math.sqrt(dotAt(v, 0, v, 0, dim)) else 0.0
+        // a pair's sum (dot, or squared distance for l2) → its distance
+        def offer(j: Int, sum: Double): Unit = heaps(j).offer(
+          if (cosine) cosineOf(sum, vNorm, qNorm(j))
+          else if (l2) math.sqrt(sum)
+          else -sum, id)
+        var j = 0
+        while (j + 4 <= nq) {
+          if (l2) sqDist4(v, block, j * dim, dim, acc) else dot4(v, block, j * dim, dim, acc)
+          offer(j, acc(0)); offer(j + 1, acc(1)); offer(j + 2, acc(2)); offer(j + 3, acc(3))
+          j += 4
+        }
+        while (j < nq) {
+          offer(j, if (l2) sqDistAt(v, 0, block, j * dim, dim)
+                   else dotAt(v, 0, block, j * dim, dim))
+          j += 1
+        }
+      }
+    }
+    Iterator.range(0, nq).flatMap { j =>
+      val qid = qs(j).qid
+      heaps(j).sorted.iterator.map { case (d, id) => Hit(qid, id, d) }
+    }
   }
 
   /** [[searchMany]] with STARVATION RETRY — the distributed form of
@@ -1193,12 +1511,12 @@ object IvfIndex {
                          queries: DataFrame, qidCol: String, qvecCol: String,
                          k: Int, initProbes: Int,
                          predicate: Option[Column] = None): DataFrame = {
-    import spark.implicits._
+    requireKnn("searchManyAdaptive", k, "initProbes", initProbes)
     val nLists = handle(spark, indexPath).listIds.length
     var remaining = queries
       .select(col(qidCol).cast("long").as("qid"), col(qvecCol).as("qv"))
     var prevRemaining: DataFrame = null // checkpointed frame of the prior round
-    var probes = math.max(1, initProbes)
+    var probes = initProbes
     var done = false
     var rounds = List.empty[DataFrame]
     while (!done) {

@@ -409,9 +409,9 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
             AnnIndexRegistry.iterativeProbedLists(
               spark, entry, h, q, kLimit, filterConds)
           else h.nearestLists(q, entry.nprobe)
-        // the generation's cached schema: no inference job per plan
-        idxPlan = graft.index.IvfIndex.pruneLists(h.lists(spark), lists)
-          .queryExecution.analyzed
+        // the generation's cached schema and only the probed lists'
+        // directories: no inference or listing job per plan
+        idxPlan = h.probedLists(spark, lists).queryExecution.analyzed
         byName = idxPlan.output.map(a => a.name -> a).toMap
         // schema drift (index built before a base-table column was added):
         // fall back to the exact scan instead of failing the query.

@@ -24,6 +24,20 @@ trait SparkSpec extends AnyFunSuite {
     case other => other.children.flatMap(fileScans)
   }
 
+  /** An ivfflat index written directly, without KMeans: `rows` (with
+    * `vec_id`, `embedding` and `list_id`) through the build's own list
+    * writer, plus the centroid and meta sidecars. Returns the index path. */
+  def writeIvf(name: String, rows: org.apache.spark.sql.DataFrame,
+               centroids: Seq[(Int, Array[Float])], metric: String): String = {
+    import spark.implicits._
+    val dir = graft.util.TempDirs.create(name).resolve("idx").toString
+    graft.index.IvfIndex.writeLists(rows, s"$dir/lists", "overwrite")
+    centroids.toDF("list_id", "centroid").coalesce(1).write.parquet(s"$dir/centroids")
+    Seq((metric, "embedding", "vec_id")).toDF("metric", "vec_col", "id_col")
+      .coalesce(1).write.parquet(s"$dir/meta")
+    dir
+  }
+
   /** CONTINUOUS per-(id,dim) pseudo-random float in [-1, 1] — the vector
     * fixture for index tests. hash_embed over short texts collapses to few
     * distinct patterns (great for dedup, degenerate for ANN indexes). */

@@ -339,4 +339,205 @@ class IvfIndexSpec extends SparkSpec {
       assert(got === exact, s"$metric lists = 1 probe must equal exact top-k")
     }
   }
+
+  // ---- the batch-scoring kernel (searchMany / probeMany) ----
+
+  private val KDim = 8
+
+  /** Index rows for the kernel specs: 300 random rows, four exact copies
+    * of row 7 (ties, across lists and within one) and one zero row, in
+    * six lists by `vec_id % 6`. */
+  private lazy val kernelRows: Seq[(Long, Array[Float])] = {
+    val rnd = new scala.util.Random(7)
+    val base = (0L until 300L).map(id => id -> Array.fill(KDim)(rnd.nextFloat() * 2 - 1))
+    base ++ Seq(500L, 501L, 502L, 506L).map(_ -> base(7)._2.clone()) :+
+      (600L -> new Array[Float](KDim))
+  }
+
+  /** The kernel rows written as a `metric` index, centroid = list mean. */
+  private def kernelIndex(metric: String, rows: Seq[(Long, Array[Float])] = kernelRows): String = {
+    import spark.implicits._
+    val byList = rows.filter(_._2.length == KDim).groupBy { case (id, _) => (id % 6).toInt }
+    val cents = byList.toSeq.sortBy(_._1).map { case (l, rs) =>
+      l -> Array.tabulate(KDim)(i => rs.map(_._2(i).toDouble).sum.toFloat / rs.length)
+    }
+    writeIvf(s"graft_kernel_$metric",
+      rows.map { case (id, v) => (id, v, (id % 6).toInt) }.toDF("vec_id", "embedding", "list_id"),
+      cents, metric)
+  }
+
+  /** Top-k by (dist, vec_id) over `rows`, NaN distances skipped — the
+    * expressions' arithmetic, computed here on the driver. */
+  private def bruteForce(metric: String, rows: Seq[(Long, Array[Float])],
+                         q: Array[Float], k: Int): Seq[(Long, Double)] = {
+    def dot(a: Array[Float], b: Array[Float]): Double = {
+      var s = 0.0; var i = 0
+      while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+      s
+    }
+    rows.map { case (id, v) =>
+      id -> (metric match {
+        case "cosine" => 1.0 - dot(v, q) / (math.sqrt(dot(v, v)) * math.sqrt(dot(q, q)))
+        case "l2" =>
+          var s = 0.0; var i = 0
+          while (i < v.length) { val d = v(i).toDouble - q(i).toDouble; s += d * d; i += 1 }
+          math.sqrt(s)
+        case _ => -dot(v, q)
+      })
+    }.filterNot(_._2.isNaN)
+      .sortWith((a, b) => if (a._2 != b._2) a._2 < b._2 else a._1 < b._1)
+      .take(k)
+  }
+
+  private def byQuery(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[(Long, Double)]] =
+    df.collect().groupBy(_.getLong(0)).map { case (q, rs) =>
+      q -> rs.sortBy(_.getLong(1)).map(r => (r.getLong(2), r.getDouble(3))).toSeq
+    }
+
+  private def causes(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  test("kernel parity: searchMany and probeMany equal brute force per metric — " +
+       "ties in vec_id order, zero-norm query and row, predicate, partial probes") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val qvs = Seq(
+      1L -> kernelRows(7)._2, // ties with rows 500, 501, 502 and 506
+      2L -> kernelRows(42)._2,
+      3L -> Array.fill(KDim)(rnd.nextFloat() * 2 - 1),
+      4L -> new Array[Float](KDim)) // zero-norm: no rows under cosine
+    val queries = qvs.toDF("qid", "qv")
+    for (metric <- Seq("cosine", "l2", "ip")) {
+      val idx = kernelIndex(metric)
+      val h = IvfIndex.handle(spark, idx)
+      for ((pred, keep) <- Seq[(Option[org.apache.spark.sql.Column], Long => Boolean)](
+             (None, _ => true),
+             (Some(col("vec_id") % 3 =!= 0), _ % 3 != 0),
+             (Some(col("vec_id") >= 500), _ >= 500)); // ties + the zero row only
+           nprobe <- Seq(6, 2)) {
+        val want = qvs.map { case (qid, q) =>
+          val lists = h.nearestLists(q, nprobe).toSet
+          qid -> bruteForce(metric, kernelRows.filter { case (id, _) =>
+            keep(id) && lists((id % 6).toInt) }, q, 10)
+        }.filter(_._2.nonEmpty).toMap
+        val what = s"$metric nprobe=$nprobe predicate=$pred"
+        assert(byQuery(IvfIndex.searchMany(spark, idx, queries, "qid", "qv", 10, nprobe,
+          pred)) === want, s"searchMany $what")
+        if (pred.isEmpty) assert(byQuery(IvfIndex.probeMany(spark, idx, queries, "qid", "qv",
+          10, nprobe)) === want, s"probeMany $what")
+      }
+      if (metric == "cosine") {
+        assert(!byQuery(IvfIndex.searchMany(spark, idx, queries, "qid", "qv", 10, 6))
+          .contains(4L), "a zero-norm query returns no rows under cosine")
+        val ties = byQuery(IvfIndex.searchMany(spark, idx, queries, "qid", "qv", 5, 6))(1L)
+        assert(ties.map(_._1) === Seq(7L, 500L, 501L, 502L, 506L) &&
+          ties.map(_._2).distinct.length === 1, s"tied distances in vec_id order: $ties")
+      }
+    }
+  }
+
+  test("kernel parity: dimension mismatches throw the expressions' message") {
+    import spark.implicits._
+    val idx = kernelIndex("cosine")
+    val short = Seq(1L -> Array.fill(5)(0.5f)).toDF("qid", "qv")
+    for (run <- Seq[() => Any](
+        () => IvfIndex.searchMany(spark, idx, short, "qid", "qv", 5, 6).collect(),
+        () => IvfIndex.probeMany(spark, idx, short, "qid", "qv", 5, 6).collect()))
+      assert(causes(intercept[Exception](run())).contains("vector dimension mismatch: 8 vs 5"))
+    // a list row narrower than the centroids and queries: the scoring
+    // itself must refuse it, as the distance expression does
+    val bad = kernelIndex("cosine", kernelRows :+ (6000L -> Array.fill(5)(0.5f)))
+    val q = Seq(1L -> kernelRows(3)._2).toDF("qid", "qv")
+    for (run <- Seq[() => Any](
+        () => IvfIndex.searchMany(spark, bad, q, "qid", "qv", 5, 6).collect(),
+        () => IvfIndex.probeMany(spark, bad, q, "qid", "qv", 5, 6).collect()))
+      assert(causes(intercept[Exception](run())).contains("vector dimension mismatch: 5 vs 8"))
+  }
+
+  test("kernel balance: a one-partition batch probing one list runs a parallel scoring stage") {
+    val idx = kernelIndex("cosine")
+    val h = IvfIndex.handle(spark, idx)
+    val nq = 64
+    // every query is list 0's centroid, so nprobe = 1 probes list 0 only
+    val queries = spark.range(0, nq, 1, 1)
+      .select(col("id").as("qid"), typedLit(h.centroids(h.listIds.indexOf(0))).as("qv"))
+      .limit(nq)
+    assert(queries.rdd.getNumPartitions === 1)
+    val par = spark.sparkContext.defaultParallelism
+    // (tasks, parent stages) per stage: the scoring stage is the one that
+    // reads two shuffles, the probe rows and the list rows
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stages.add((e.stageInfo.numTasks, e.stageInfo.parentIds.length))
+    }
+    for (run <- Seq[() => org.apache.spark.sql.DataFrame](
+        () => IvfIndex.searchMany(spark, idx, queries, "qid", "qv", 5, 1),
+        () => IvfIndex.probeMany(spark, idx, queries, "qid", "qv", 5, 1))) {
+      stages.clear()
+      spark.sparkContext.addSparkListener(listener)
+      val got = try {
+        val rows = byQuery(run())
+        org.apache.spark.GraftSparkShim.drainListenerBus(spark.sparkContext)
+        rows
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(got.size === nq && got.values.forall(_.length === 5))
+      import scala.jdk.CollectionConverters._
+      val scoring = stages.asScala.filter(_._2 == 2).map(_._1)
+      assert(scoring.nonEmpty && scoring.max >= math.min(par, nq),
+        s"scoring stage tasks $scoring, want >= ${math.min(par, nq)}")
+    }
+  }
+
+  test("unit layout: equal probe rows per partition through Spark's own exchange; " +
+       "hot lists split; blocks stay under the byte bound") {
+    import spark.implicits._
+    val counts = Seq(3 -> 600L, 8 -> 400L, 9 -> 7L)
+    val l = IvfIndex.unitLayout(counts, 4, 384)
+    assert(l.parts === 4 && l.keys.keySet === Set(3, 8, 9))
+    counts.foreach { case (lid, c) =>
+      val e = l.ends(lid)
+      assert(e.last === c && e.zip(e.drop(1)).forall { case (a, b) => a < b })
+      assert(e.length === l.keys(lid).length)
+    }
+    assert(l.ends(3).length > 1, "a list past one partition's share splits")
+    // each block's probe rows, sent through repartition(parts, unit)
+    val blocks = counts.flatMap { case (lid, _) =>
+      val e = l.ends(lid)
+      l.keys(lid).indices.map(i => (l.keys(lid)(i), e(i) - (if (i == 0) 0L else e(i - 1))))
+    }
+    val perPart = blocks.toDF("unit", "n").repartition(l.parts, col("unit"))
+      .groupBy(spark_partition_id().as("p")).agg(sum("n").as("n"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(perPart === (0 until 4).map(_ -> 252L).toMap - 3 + (3 -> 251L),
+      s"probe rows per partition: $perPart")
+    // 4096 dims: 64 queries fit the block byte bound
+    val wide = IvfIndex.unitLayout(Seq(0 -> 1000L), 4, 4096)
+    val e = wide.ends(0)
+    assert((e.head +: e.zip(e.drop(1)).map { case (a, b) => b - a }).forall(_ <= 64))
+    // fewer probe rows than cores: one row per partition
+    assert(IvfIndex.unitLayout(Seq(5 -> 3L), 4, 8).parts === 3)
+    assert(IvfIndex.unitLayout(Nil, 4, 8).parts === 1)
+  }
+
+  test("k and nprobe below 1 fail fast in the caller's words") {
+    val q = graft.Tables.embeddings(spark, Sf0001).filter(col("vec_id") < 3)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    def msg(f: => Any): String = intercept[IllegalArgumentException](f).getMessage
+    assert(msg(IvfIndex.probe(spark, indexPath, queryVec, 10, 0))
+      .contains("probe: nprobe must be >= 1, got 0"))
+    assert(msg(IvfIndex.probe(spark, indexPath, queryVec, 0, 4))
+      .contains("probe: k must be >= 1, got 0"))
+    for ((name, run) <- Seq[(String, (Int, Int) => Any)](
+        "probeMany" -> ((k, p) => IvfIndex.probeMany(spark, indexPath, q, "qid", "qv", k, p)),
+        "searchMany" -> ((k, p) => IvfIndex.searchMany(spark, indexPath, q, "qid", "qv", k, p)))) {
+      assert(msg(run(5, 0)).contains(s"$name: nprobe must be >= 1, got 0"))
+      assert(msg(run(0, 4)).contains(s"$name: k must be >= 1, got 0"))
+    }
+    assert(msg(IvfIndex.searchManyAdaptive(spark, indexPath, q, "qid", "qv", 5, 0))
+      .contains("searchManyAdaptive: initProbes must be >= 1, got 0"))
+    assert(msg(IvfIndex.searchManyAdaptive(spark, indexPath, q, "qid", "qv", 0, 2))
+      .contains("searchManyAdaptive: k must be >= 1, got 0"))
+  }
 }

@@ -445,6 +445,65 @@ class AnnRewriteSpec extends SparkSpec {
     assert(df.collect().length === 10)
   }
 
+  test("past 32 list directories a warm kNN still plans with zero jobs; " +
+       "rows equal the lists-root read") {
+    import spark.implicits._
+    import graft.index.IvfIndex
+    // 40 lists, one bucket directory each — past Spark's 32-path threshold
+    // for listing a directory tree with a job — written without KMeans
+    val nLists = 40
+    val rows = spark.range(4000).select(col("id").as("vec_id"),
+      hashNoise(col("id"), 8).as("embedding"), (col("id") % nLists).cast("int").as("list_id"))
+    val table = graft.util.TempDirs.create("graft_ann_40").resolve("table").toString
+    rows.drop("list_id").write.parquet(table)
+    val cents = rows.filter(col("vec_id") < nLists).orderBy("list_id")
+      .select("list_id", "embedding").as[(Int, Array[Float])].collect().toSeq
+    val idx = writeIvf("graft_ann_40_idx", rows, cents, "cosine")
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$idx/lists"))
+      .count(_.isDirectory) === nLists)
+    AnnIndexRegistry.register(table, idx, nprobe = 4)
+    try {
+      def knn(q: Array[Float]) = spark.read.parquet(table)
+        .orderBy(cosine_distance(col("embedding"), vector_lit(q)), col("vec_id")).limit(10)
+      knn(cents.head._2).collect() // warm: handle, lists schema and directories
+      val fresh = cents(7)._2.map(_ * 0.5f + 0.01f)
+      val df = knn(fresh)
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val plan = try {
+        org.apache.spark.GraftSparkShim.drainListenerBus(spark.sparkContext)
+        val before = jobs.get()
+        val p = df.queryExecution.optimizedPlan
+        org.apache.spark.GraftSparkShim.drainListenerBus(spark.sparkContext)
+        assert(jobs.get() === before, "planning past 32 lists must launch no Spark job")
+        p
+      } finally spark.sparkContext.removeSparkListener(listener)
+      val roots = plan.collectLeaves().flatMap {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+          l.relation match {
+            case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+              r.location.rootPaths.map(_.toString)
+            case _ => Nil
+          }
+        case _ => Nil
+      }
+      assert(roots.nonEmpty && roots.forall(_.contains(s"$idx/lists")),
+        s"the plan must read the index's lists: $roots")
+      // the same probed lists read from the lists root
+      val h = IvfIndex.handle(spark, idx)
+      val want = IvfIndex.pruneLists(spark.read.parquet(s"$idx/lists"),
+          h.nearestLists(fresh, 4))
+        .orderBy(cosine_distance(col("embedding"), vector_lit(fresh)), col("vec_id")).limit(10)
+        .select("vec_id").as[Long].collect().toSeq
+      assert(df.select("vec_id").as[Long].collect().toSeq === want)
+    } finally AnnIndexRegistry.unregister(table)
+  }
+
   test("driver list ranking equals Spark's orderBy(dist, list_id) over the sidecar") {
     import graft.functions.{inner_product, l2_distance}
     import graft.index.IvfIndex

@@ -287,12 +287,15 @@ object PlanGallery {
       ("ivf_searchmany_distributed",
         "The corpus-sized batch-probe twin (IvfIndex.searchMany — what a " +
           "bulk kNN backfill runs): per-query centroid ranking is a " +
-          "map-side bounded heap against the BROADCAST sidecar, probe rows " +
-          "flow into ONE list_id equi-join against the list-partitioned " +
-          "index, and per-query top-k is the bounded-heap aggregate. " +
-          "Nothing query-frame-sized touches the driver — contrast " +
-          "probeMany, whose collected probe-pair set buys directory-level " +
-          "pruning for serving batches.",
+          "map-side bounded heap against the index handle's centroids " +
+          "(a broadcast local relation), one count job lays out " +
+          "(list, query-block) work units from the per-list probe counts, " +
+          "and both sides reach their unit through explicitly sized " +
+          "exchanges into ONE sorted CoGroup — the scoring kernel, whose " +
+          "width follows the probe rows, not the query frame's bytes. " +
+          "Units emit ≤ k rows per query; the bounded-heap aggregate " +
+          "merges them. Nothing query-frame-sized touches the driver — " +
+          "contrast probeMany, which collects the probe pairs instead.",
         () => {
           val idx = IndexQueries.indexFor(spark, sfDir)
           val q = Tables.embeddings(spark, sfDir)
